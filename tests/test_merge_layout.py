@@ -97,6 +97,46 @@ def test_write_sorted_row_groups_monotone(spark, tmp_path):
     assert "DELTA_BINARY_PACKED" in time_encodings, time_encodings
 
 
+def test_write_sorted_arrow_table_one_job(spark, tmp_path):
+    # a driver-resident Arrow table takes the one-job recipe: sorted in
+    # Arrow, written by one task in num_files consecutive files — the same
+    # layout contract as the range-partitioned DataFrame path
+    import glob
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rnd = random.Random(11)
+    times = rnd.sample(range(100000), 50000)
+    job = [rnd.choice(["api", "db", None]) for _ in times]
+    table = pa.table({
+        "time": pa.array(times, pa.int64()),
+        "value": pa.array([float(t) for t in times], pa.float64()),
+        "label_job": pa.array(job, pa.string()),
+    })
+    sc = spark.sparkContext
+    for num_files in (None, 4, 2 * sc.defaultParallelism):
+        out = str(tmp_path / f"arrow_{num_files}")
+        sc.setJobGroup(out, "arrow write")
+        write_sorted(table, out, num_files=num_files)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(out)) == 1  # no sample job
+        files = sorted(glob.glob(os.path.join(out, "*.parquet")))
+        assert len(files) == (num_files or 1)
+        prev_hi = None
+        for f in files:
+            t = pq.read_table(f)
+            keys = list(zip(t.column("time").to_pylist(), t.column("label_job").to_pylist()))
+            assert keys == sorted(keys, key=lambda k: (k[0], k[1] is not None, k[1] or ""))
+            if prev_hi is not None:
+                assert prev_hi <= keys[0][0]
+            prev_hi = keys[-1][0]
+            md = pq.ParquetFile(f).metadata
+            assert "DELTA_BINARY_PACKED" in md.row_group(0).column(0).encodings
+        assert spark.read.parquet(out).count() == 50000
+
+
 def test_inspect_parquet_single_file(spark):
     # works against the committed fixture file (single-file path)
     from tsdb_parquet_spark.tables import TSDB_PATH

@@ -65,7 +65,11 @@ def main(argv: list[str] | None = None) -> None:
     )
     p_tb.add_argument("blocks", nargs="+", help="block directories (ULID dirs)")
     p_tb.add_argument("dest")
-    p_tb.add_argument("--files", type=int, default=None)
+    p_tb.add_argument(
+        "--files", type=int, default=None,
+        help="output files; default: one file for a single block (decoded on "
+             "the driver), spark.sql.shuffle.partitions for several blocks",
+    )
 
     p_r = sub.add_parser("rate", help="reset-aware counter increase/rate per series")
     p_r.add_argument("table")

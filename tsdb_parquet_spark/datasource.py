@@ -23,9 +23,11 @@ Scale design:
   block splits into ``series_per_partition`` slices so one hot block
   cannot serialize a stage.  Each slice re-reads the small index on the
   executor and decodes only its own series' chunks.
-- **Arrow-batched rows.**  ``read()`` yields pyarrow record batches (the
-  documented fast path for Python data sources) — columnar from decoder
-  to JVM, no per-row Python objects.
+- **Arrow-batched rows.**  ``read()`` yields the record batches of
+  ``tsdb_block.block_to_arrow`` (the documented fast path for Python data
+  sources) — the same block→Arrow assembler the ingest paths use, with
+  the pushed series filter and chunk time pruning passed in; columnar
+  from decoder to JVM, no per-row Python objects.
 
 The wide-layout output schema (``time``, ``value``, ``label_*`` string
 columns, two-pass label-name union across blocks) matches
@@ -46,7 +48,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from .tsdb_block import _col_name, decode_xor_chunk, read_index
+from .tsdb_block import block_to_arrow, read_index, wide_columns, wide_ddl
 
 FORMAT_NAME = "tsdb"
 
@@ -182,68 +184,16 @@ class TsdbBlockReader(DataSourceReader):
         return parts
 
     def read(self, partition: _BlockSlice):
-        import struct
-
-        import pyarrow as pa
-
-        from .tsdb_block import _uvarint, crc32c
-
         entries = read_index(os.path.join(partition.block_dir, "index"))[
             partition.series_lo : partition.series_hi
         ]
-        # one sequential read per chunk segment file this slice touches
-        # (the scan-friendly access pattern; refs are (segment<<32 | offset))
-        seg_blobs: dict[int, bytes] = {}
-
-        def _segment(seg: int) -> bytes:
-            blob = seg_blobs.get(seg)
-            if blob is None:
-                p = os.path.join(partition.block_dir, "chunks", f"{seg + 1:06d}")
-                with open(p, "rb") as fh:
-                    blob = fh.read()
-                seg_blobs[seg] = blob
-            return blob
-
-        want_labels = [c for c in self.cols if c not in ("time", "value")]
-        times: list[int] = []
-        values: list[float] = []
-        label_vals: dict[str, list] = {c: [] for c in want_labels}
-        for e in entries:
-            if not self._series_matches(e.labels):
-                continue  # pushed label matcher: chunks never opened
-            samples: list[tuple[int, float]] = []
-            for _mint, _maxt, ref in e.chunk_refs:
-                if not self._chunk_overlaps(_mint, _maxt):
-                    continue  # pushed time bound: chunk skipped
-                blob = _segment(ref >> 32)
-                off = ref & 0xFFFFFFFF
-                dlen, p = _uvarint(blob, off)
-                enc_payload = blob[p : p + 1 + dlen]
-                (crc,) = struct.unpack(">I", blob[p + 1 + dlen : p + 5 + dlen])
-                if crc32c(enc_payload) != crc:
-                    raise ValueError(f"chunk CRC mismatch at ref {ref:#x}")
-                if enc_payload[0] != 1:
-                    raise ValueError(f"unsupported chunk encoding {enc_payload[0]}")
-                samples.extend(decode_xor_chunk(enc_payload[1:]))
-            cols = {_col_name(k): v for k, v in e.labels.items()}
-            for t, v in samples:
-                times.append(t)
-                values.append(v)
-            n = len(samples)
-            for c, acc in label_vals.items():
-                acc.extend([cols.get(c)] * n)
-
-        arrays = {
-            "time": lambda: pa.array(times, pa.int64()),
-            "value": lambda: pa.array(values, pa.float64()),
-        }
-        yield pa.record_batch(
-            [
-                arrays[c]() if c in arrays else pa.array(label_vals[c], pa.string())
-                for c in self.cols
-            ],
-            names=self.cols,
-        )
+        yield from block_to_arrow(
+            partition.block_dir,
+            columns=self.cols,
+            series=entries,
+            keep_series=self._series_matches,  # pushed label matchers
+            keep_chunk=self._chunk_overlaps,  # pushed time bounds
+        ).to_batches()
 
 
 class TsdbBlockStreamReader(DataSourceStreamReader):
@@ -312,16 +262,10 @@ class TsdbBlockDataSource(DataSource):
         return FORMAT_NAME
 
     def schema(self) -> str:
-        label_cols: set[str] = set()
-        for d in _block_dirs(self.options["path"]):
-            for e in read_index(os.path.join(d, "index")):
-                label_cols.update(_col_name(k) for k in e.labels)
-        cols = ["time", "value", *sorted(label_cols)]
-        return ", ".join(
-            f"`{c}` "
-            + ("bigint" if c == "time" else "double" if c == "value" else "string")
-            for c in cols
-        )
+        return wide_ddl(wide_columns(
+            [e for d in _block_dirs(self.options["path"])
+             for e in read_index(os.path.join(d, "index"))]
+        ))
 
     def reader(self, schema) -> TsdbBlockReader:
         return TsdbBlockReader(self.options, [f.name for f in schema.fields])

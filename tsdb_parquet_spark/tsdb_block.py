@@ -20,19 +20,32 @@ samples per its meta.json) byte-for-byte:
 - **XOR (Gorilla) payload**: uint16 sample count; first sample varint
   timestamp + raw float64 bits; second sample uvarint time-delta; then
   delta-of-delta timestamps in {0, 14, 17, 20, 64}-bit buckets and
-  leading/trailing-window XOR'd values — MSB-first bit stream.
+  leading/trailing-window XOR'd values — MSB-first bit stream, read a
+  word at a time (the payload is one Python int; each field is one
+  shift-and-mask), with Prometheus's dod bucket quirk kept bit for bit.
 
-CRCs (Castagnoli, not IEEE) are verified for every chunk and the symbol
-table, so corruption fails loudly rather than producing wrong samples.
+CRCs (Castagnoli, not IEEE) are verified for every chunk, the index TOC,
+the symbol table and every series entry, so corruption fails loudly rather
+than producing wrong samples.
 
-Spark-first scale posture: a *block* is the parallelism unit.  One block is
-bounded (Prometheus compacts to ≤ 512 MB segments), so decoding one block
-is a single-task job; a directory of N blocks ingests via
-``ingest_blocks`` — a DataFrame of block paths fanned out through
-``mapInPandas`` so each executor decodes its own blocks and the result
-flows straight into ``writer.write_sorted`` without ever landing on the
-driver.  That is the same shape the reference's single-process loop takes,
-distributed.
+A block decodes straight into one wide ``pyarrow.Table``
+(``block_to_arrow``): ``time`` and ``value`` columns filled from the
+decoded samples, each label column the series' value repeated over its
+rows with one ``take``, every chunk segment read once.  That one assembler
+serves all three paths:
+
+- ``ingest_block`` decodes one block on the driver (a block is bounded:
+  Prometheus compacts to ≤ 512 MB segments) and hands the table to
+  ``writer.write_sorted``, which sorts it in Arrow and writes it in one
+  Spark job;
+- ``ingest_blocks`` fans a directory of N blocks out block-per-task through
+  ``mapInArrow``, so each executor decodes its own blocks and the result
+  flows into ``writer.write_sorted``'s range-partitioned recipe without
+  ever landing on the driver — the reference's single-process loop,
+  distributed;
+- ``datasource.TsdbBlockReader`` (``format("tsdb")``) yields the table's
+  batches for each (block, series range) slice, with its pushed series
+  filter and chunk time pruning.
 """
 
 from __future__ import annotations
@@ -41,7 +54,7 @@ import json
 import os
 import struct
 from dataclasses import dataclass
-from typing import Iterator
+from typing import Callable, Iterator
 
 # ---------------------------------------------------------------------------
 # CRC32-Castagnoli (the TSDB checksum; zlib.crc32 is IEEE so unusable here)
@@ -87,105 +100,89 @@ def _varint(buf: bytes, pos: int) -> tuple[int, int]:
     return (u >> 1) ^ -(u & 1), pos  # zigzag
 
 
-class _BitReader:
-    """MSB-first bit reader over the XOR chunk payload."""
-
-    __slots__ = ("buf", "byte", "bit")
-
-    def __init__(self, buf: bytes, byte: int = 0):
-        self.buf = buf
-        self.byte = byte
-        self.bit = 0
-
-    def read_bit(self) -> int:
-        b = (self.buf[self.byte] >> (7 - self.bit)) & 1
-        self.bit += 1
-        if self.bit == 8:
-            self.bit = 0
-            self.byte += 1
-        return b
-
-    def read_bits(self, n: int) -> int:
-        out = 0
-        for _ in range(n):
-            out = (out << 1) | self.read_bit()
-        return out
-
-
 # ---------------------------------------------------------------------------
 # XOR (Gorilla) chunk decode — the Python twin of the iterator the reference
 # drives at hello.go:489-497 (`it.Next() == chunkenc.ValFloat; it.At()`).
+#
+# The MSB-first bit stream after the second sample's time delta is read a
+# word at a time: the whole remainder is one Python int, and ``left`` counts
+# the bits still to the right of the cursor, so reading ``n`` bits is
+# ``left -= n; (word >> left) & mask``.  Eight zero bytes of padding let the
+# fixed-width prefix peeks below run past the last sample's final bit.  The
+# consumed high bits are masked off every ~1 KiB of stream, so a shift never
+# costs more than that however long the chunk is.
 
 def decode_xor_chunk(data: bytes) -> list[tuple[int, float]]:
     """Decode one XOR chunk payload into [(timestamp_ms, value), ...]."""
-    num = struct.unpack_from(">H", data, 0)[0]
+    num = (data[0] << 8) | data[1]
     if num == 0:
         return []
     t, pos = _varint(data, 2)
-    v = struct.unpack_from(">d", data, pos)[0]
-    out = [(t, v)]
+    vbits = int.from_bytes(data[pos : pos + 8], "big")
     if num == 1:
-        return out
+        return [(t, struct.unpack_from(">d", data, pos)[0])]
+    # second sample: plain uvarint time delta — byte-aligned here by
+    # construction (varint t + 64 value bits fill whole bytes)
+    t_delta, pos = _uvarint(data, pos + 8)
+    word = int.from_bytes(data[pos:] + bytes(8), "big")
+    left = top = (len(data) - pos + 8) * 8
 
-    r = _BitReader(data, pos + 8)
-    t_delta, leading, trailing = 0, 0, 0
+    ts = [t]
+    vs = [vbits]
+    leading = trailing = 0
     for i in range(1, num):
-        if i == 1:
-            # second sample: plain uvarint time delta — byte-aligned here
-            # by construction (varint t + 64 value bits fill whole bytes)
-            t_delta = _bit_uvarint(r)
-        else:
-            t_delta += _read_dod(r)
+        if top - left > 8192:
+            word &= (1 << left) - 1
+            top = left
+        if i > 1:
+            # delta-of-delta: prefix '0' | '10' 14 bits | '110' 17 bits |
+            # '1110' 20 bits | '1111' 64 bits, peeked as one 4-bit window
+            prefix = (word >> (left - 4)) & 0xF
+            if prefix < 0b1000:
+                left -= 1
+            else:
+                if prefix < 0b1100:
+                    left -= 2
+                    sz = 14
+                elif prefix < 0b1110:
+                    left -= 3
+                    sz = 17
+                else:
+                    left -= 4
+                    sz = 20 if prefix == 0b1110 else 64
+                left -= sz
+                dod = (word >> left) & ((1 << sz) - 1)
+                if sz == 64:
+                    if dod >= 1 << 63:
+                        dod -= 1 << 64
+                elif dod > 1 << (sz - 1):
+                    # Prometheus's in-range test: a raw value strictly
+                    # greater than 2^(n-1) wraps negative, so -2^(n-1) and
+                    # +2^(n-1) share an encoding
+                    dod -= 1 << sz
+                t_delta += dod
         t += t_delta
+        ts.append(t)
 
-        # value: Gorilla XOR
-        if r.read_bit():
-            if r.read_bit():
-                leading = r.read_bits(5)
-                mbits = r.read_bits(6) or 64
+        # value: Gorilla XOR — '0' same value, '10' reuse the previous
+        # leading/trailing window, '11' + 5 bits leading + 6 bits length
+        ctrl = (word >> (left - 2)) & 0b11
+        if ctrl < 0b10:
+            left -= 1
+        else:
+            left -= 2
+            if ctrl == 0b11:
+                left -= 11
+                head = (word >> left) & 0x7FF
+                leading = head >> 6
+                mbits = (head & 0x3F) or 64
                 trailing = 64 - leading - mbits
             else:
                 mbits = 64 - leading - trailing
-            bits = r.read_bits(mbits)
-            vbits = struct.unpack(">Q", struct.pack(">d", v))[0]
-            vbits ^= bits << trailing
-            v = struct.unpack(">d", struct.pack(">Q", vbits))[0]
-        out.append((t, v))
-    return out
-
-
-def _to_signed64(u: int) -> int:
-    return u - (1 << 64) if u >= (1 << 63) else u
-
-
-def _bit_uvarint(r: _BitReader) -> int:
-    out = shift = 0
-    while True:
-        b = r.read_bits(8)
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return out
-        shift += 7
-
-
-def _read_dod(r: _BitReader) -> int:
-    """Delta-of-delta with Gorilla's prefix buckets.  The in-range test is
-    Prometheus's exact quirk: a raw value strictly greater than 2^(n-1)
-    wraps negative (so -2^(n-1) and +2^(n-1) share an encoding)."""
-    if not r.read_bit():
-        return 0  # '0'
-    if not r.read_bit():
-        sz = 14  # '10'
-    elif not r.read_bit():
-        sz = 17  # '110'
-    elif not r.read_bit():
-        sz = 20  # '1110'
-    else:  # '1111'
-        return _to_signed64(r.read_bits(64))
-    bits = r.read_bits(sz)
-    if bits > (1 << (sz - 1)):
-        bits -= 1 << sz
-    return bits
+            left -= mbits
+            vbits ^= ((word >> left) & ((1 << mbits) - 1)) << trailing
+        vs.append(vbits)
+    return list(zip(ts, struct.unpack(f">{num}d", struct.pack(f">{num}Q", *vs))))
 
 
 # ---------------------------------------------------------------------------
@@ -275,33 +272,38 @@ def _parse_series(body: bytes, symbols: list[str]) -> SeriesEntry:
     return SeriesEntry(labels=labels, chunk_refs=refs)
 
 
-def read_chunk(block_dir: str, ref: int) -> list[tuple[int, float]]:
-    """Resolve a chunk ref (segment << 32 | offset) and decode it."""
-    segment, offset = ref >> 32, ref & 0xFFFFFFFF
-    seg_path = os.path.join(block_dir, "chunks", f"{segment + 1:06d}")
-    with open(seg_path, "rb") as f:
-        f.seek(offset)
-        head = f.read(16)
-        dlen, p = _uvarint(head, 0)
-        f.seek(offset + p)
-        enc_payload = f.read(1 + dlen)
-        crc = struct.unpack(">I", f.read(4))[0]
-    if crc32c(enc_payload) != crc:
-        raise ValueError(f"chunk CRC mismatch at ref {ref:#x}")
-    enc, payload = enc_payload[0], enc_payload[1:]
-    if enc != 1:
-        raise ValueError(f"unsupported chunk encoding {enc} (want 1 = XOR)")
-    return decode_xor_chunk(payload)
+def _chunk_reader(block_dir: str) -> Callable[[int], list[tuple[int, float]]]:
+    """A ``ref -> samples`` reader over one block's chunks: resolves the
+    ref (segment << 32 | offset), checks the chunk's CRC and encoding and
+    decodes it.  Each chunks segment file is read once, on first use."""
+    segments: dict[int, bytes] = {}
+
+    def read(ref: int) -> list[tuple[int, float]]:
+        seg, off = ref >> 32, ref & 0xFFFFFFFF
+        blob = segments.get(seg)
+        if blob is None:
+            with open(os.path.join(block_dir, "chunks", f"{seg + 1:06d}"), "rb") as f:
+                blob = segments[seg] = f.read()
+        dlen, p = _uvarint(blob, off)
+        enc_payload = blob[p : p + 1 + dlen]
+        if crc32c(enc_payload) != int.from_bytes(blob[p + 1 + dlen : p + 5 + dlen], "big"):
+            raise ValueError(f"chunk CRC mismatch at ref {ref:#x}")
+        if enc_payload[0] != 1:
+            raise ValueError(f"unsupported chunk encoding {enc_payload[0]} (want 1 = XOR)")
+        return decode_xor_chunk(enc_payload[1:])
+
+    return read
 
 
 def read_block(block_dir: str) -> Iterator[tuple[dict[str, str], list[tuple[int, float]]]]:
     """Iterate (labels, samples) per series — the reference's
     ``for sset.Next() { series.Labels(); it.Next() }`` loop
     (hello.go:480-497) over the raw block bytes."""
+    read = _chunk_reader(block_dir)
     for entry in read_index(os.path.join(block_dir, "index")):
         samples: list[tuple[int, float]] = []
         for _mint, _maxt, ref in entry.chunk_refs:
-            samples.extend(read_chunk(block_dir, ref))
+            samples += read(ref)
         yield entry.labels, samples
 
 
@@ -311,7 +313,7 @@ def block_meta(block_dir: str) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# block → wide-layout rows (the reference's Data{Value, Time, LABEL} rows,
+# block → wide-layout table (the reference's Data{Value, Time, LABEL} rows,
 # hello.go:489-497, in this engine's label_<name> column convention)
 
 METRIC_LABEL = "__name__"
@@ -323,94 +325,116 @@ def _col_name(label: str) -> str:
     return "label_name" if label == METRIC_LABEL else f"label_{label}"
 
 
-def block_to_pandas(block_dir: str):
-    """Decode a whole block into a wide pandas DataFrame (time, value,
-    label_*).  Column set = union of label names in the block's index."""
-    import pandas as pd
+def wide_columns(entries: list[SeriesEntry]) -> list[str]:
+    """``time``, ``value``, then the sorted union of the entries' label
+    columns — the wide layout's column list."""
+    labels = {_col_name(k) for e in entries for k in e.labels}
+    return ["time", "value", *sorted(labels)]
 
-    series = list(read_block(block_dir))
-    label_cols: list[str] = []
-    for labels, _ in series:
-        for k in labels:
-            c = _col_name(k)
-            if c not in label_cols:
-                label_cols.append(c)
-    label_cols.sort()
 
-    cols: dict[str, list] = {"time": [], "value": []}
-    for c in label_cols:
-        cols[c] = []
-    for labels, samples in series:
-        vals = {_col_name(k): v for k, v in labels.items()}
-        for t, v in samples:
-            cols["time"].append(t)
-            cols["value"].append(v)
-            for c in label_cols:
-                cols[c].append(vals.get(c))
-    df = pd.DataFrame(cols)
-    return df.astype({"time": "int64", "value": "float64"})
+def wide_ddl(columns: list[str]) -> str:
+    """Spark DDL schema of the wide layout's ``columns``."""
+    types = {"time": "bigint", "value": "double"}
+    return ", ".join(f"`{c}` {types.get(c, 'string')}" for c in columns)
+
+
+def block_to_arrow(
+    block_dir: str,
+    columns: list[str] | None = None,
+    series: list[SeriesEntry] | None = None,
+    keep_series: Callable[[dict[str, str]], bool] | None = None,
+    keep_chunk: Callable[[int, int], bool] | None = None,
+):
+    """Decode a block into one wide ``pyarrow.Table``.
+
+    ``series`` (default: the block's whole index) are read in index order;
+    ``keep_series(labels)`` and ``keep_chunk(mint, maxt)`` skip series and
+    chunks without opening them.  ``columns`` (default: ``wide_columns``
+    of the index) fixes the output columns in any order; a label a series
+    lacks is null.  ``time`` and ``value`` are filled straight from the
+    decoded samples, and each label column is its per-series values
+    repeated over the series' rows with one ``take``.
+    """
+    import numpy as np
+    import pyarrow as pa
+
+    if series is None:
+        series = read_index(os.path.join(block_dir, "index"))
+    if columns is None:
+        columns = wide_columns(series)
+    read = _chunk_reader(block_dir)
+    samples: list[tuple[int, float]] = []
+    kept: list[dict[str, str]] = []  # label columns of each kept series
+    counts: list[int] = []  # and its number of samples
+    for e in series:
+        if keep_series is not None and not keep_series(e.labels):
+            continue
+        n0 = len(samples)
+        for mint, maxt, ref in e.chunk_refs:
+            if keep_chunk is None or keep_chunk(mint, maxt):
+                samples += read(ref)
+        kept.append({_col_name(k): v for k, v in e.labels.items()})
+        counts.append(len(samples) - n0)
+
+    times, values = zip(*samples) if samples else ((), ())
+    rows = pa.array(np.repeat(np.arange(len(kept), dtype=np.int64), counts))
+
+    def column(c: str):
+        if c == "time":
+            return pa.array(times, pa.int64())
+        if c == "value":
+            return pa.array(values, pa.float64())
+        return pa.array([labels.get(c) for labels in kept], pa.string()).take(rows)
+
+    arrays = [column(c) for c in columns]
+    # ``value`` is never null: the reference's value column is non-nullable
+    # (hello.go:122-130) and NaN samples are real data
+    schema = pa.schema(pa.field(c, a.type, nullable=c != "value") for c, a in zip(columns, arrays))
+    return pa.Table.from_arrays(arrays, schema=schema)
 
 
 def ingest_block(spark, block_dir: str, out_path: str, num_files: int | None = None) -> int:
     """Ingest ONE block into the sorted wide layout.  Single-block decode is
-    driver-side (a block is bounded by construction); the write path is the
-    shared ``writer.write_sorted``.  Returns rows written."""
+    driver-side (a block is bounded by construction) and the decoded table
+    goes to ``writer.write_sorted`` as Arrow, which sorts it and writes it
+    in one Spark job (``num_files=None`` writes one file).  Returns rows
+    written."""
     from .writer import write_sorted
 
-    pdf = block_to_pandas(block_dir)
-    df = _restore_nan_values(spark.createDataFrame(pdf))
-    write_sorted(df, out_path, num_files=num_files)
-    return len(pdf)
-
-
-def _restore_nan_values(df):
-    """pandas→Arrow conversion nulls out float NaN (``nan_as_null``), but
-    decoded sample values are never null — the reference's value column is
-    non-nullable (hello.go:122-130) and NaN samples are real data (quantile
-    series with no observations).  Any NULL after the pandas hop was a NaN;
-    put it back."""
-    from pyspark.sql import functions as F
-
-    return df.withColumn(
-        "value", F.coalesce(F.col("value"), F.lit(float("nan")))
-    )
+    table = block_to_arrow(block_dir)
+    write_sorted(table, out_path, num_files=num_files)
+    return table.num_rows
 
 
 def ingest_blocks(spark, block_dirs: list[str], out_path: str,
                   num_files: int | None = None) -> int:
     """Ingest MANY blocks with block-per-task parallelism: a DataFrame of
-    block paths fans out through ``mapInPandas`` so each executor decodes
-    its own blocks — no sample bytes ever route through the driver.  The
-    label-column union is resolved up front from the (tiny) index files so
-    the output schema is fixed before the distributed decode."""
-    import pandas as pd
+    block paths fans out through ``mapInArrow`` so each executor decodes
+    its own blocks with ``block_to_arrow`` — no sample bytes ever route
+    through the driver.  The label-column union is resolved up front from
+    the (tiny) index files so the output schema is fixed before the
+    distributed decode."""
+    from pyspark.sql import functions as F
 
-    label_cols: set[str] = set()
-    for d in block_dirs:
-        for entry in read_index(os.path.join(d, "index")):
-            label_cols.update(_col_name(k) for k in entry.labels)
-    cols = ["time", "value", *sorted(label_cols)]
-    schema = ", ".join(
-        f"`{c}` " + ("bigint" if c == "time" else "double" if c == "value" else "string")
-        for c in cols
+    from .writer import write_sorted
+
+    cols = wide_columns(
+        [e for d in block_dirs for e in read_index(os.path.join(d, "index"))]
     )
 
     def _decode(batches):
-        for pdf in batches:
-            for d in pdf["block_dir"]:
-                block = block_to_pandas(d)
-                for c in cols:
-                    if c not in block.columns:
-                        block[c] = None
-                yield block[cols]
+        for batch in batches:
+            for d in batch.column("block_dir").to_pylist():
+                yield from block_to_arrow(d, columns=cols).to_batches()
 
     paths = spark.createDataFrame(
         [(d,) for d in block_dirs], "block_dir string"
     ).repartition(len(block_dirs))
-    decoded = _restore_nan_values(paths.mapInPandas(_decode, schema=schema))
-
-    from .writer import write_sorted
-
+    decoded = paths.mapInArrow(_decode, schema=wide_ddl(cols))
+    # a Python function's output schema is always nullable; ``value`` is
+    # never null, so declare it required (the coalesce never fires), as
+    # the single-block path's Arrow schema does
+    decoded = decoded.withColumn("value", F.coalesce("value", F.lit(float("nan"))))
     write_sorted(decoded, out_path, num_files=num_files)
     return spark.read.parquet(out_path).count()
 
@@ -425,7 +449,7 @@ def ingest_blocks(spark, block_dirs: list[str], out_path: str,
 # section (valid per format: sections may be empty).
 
 class _BitWriter:
-    """MSB-first bit writer (inverse of _BitReader)."""
+    """MSB-first bit writer (the inverse of ``decode_xor_chunk``'s reads)."""
 
     def __init__(self):
         self.buf = bytearray()

@@ -7,18 +7,28 @@ DELTA_BINARY_PACKED+SNAPPY, labels RLE_DICTIONARY (hello.go:126-144).  The
 sort is what makes time-range queries prune: Parquet row-group min/max stats
 on ``time`` become disjoint ranges, so a range scan touches few groups.
 
-Spark equivalent (SURVEY.md §4 O3): sorting is a write-time recipe, not a
-schema property —
+One layout contract — ``num_files`` files, each sorted, with ordered and
+disjoint time ranges — and two recipes, chosen by where the input lives:
 
-    df.repartitionByRange(N, "time")      # global range partition on time
-      .sortWithinPartitions("time", *labels, nulls-first)
-      .write.parquet(path)
+- **A Spark DataFrame** (distributed data; SURVEY.md §4 O3): sorting is a
+  write-time recipe, not a schema property —
 
-``repartitionByRange`` samples the time distribution, so output files hold
-disjoint time ranges (file-level pruning); ``sortWithinPartitions`` orders
-rows inside each file (row-group-level pruning).  Dictionary encoding is
-automatic; delta encoding comes with the Parquet V2 writer; snappy/zstd via
-session config (session.py).
+      df.repartitionByRange(N, "time")      # global range partition on time
+        .sortWithinPartitions("time", *labels, nulls-first)
+        .write.parquet(path)
+
+  ``repartitionByRange`` samples the time distribution, so output files
+  hold disjoint time ranges (file-level pruning); ``sortWithinPartitions``
+  orders rows inside each file (row-group-level pruning).  Three Spark
+  jobs: the range sample, the shuffle, the write.
+- **A ``pyarrow.Table``** (already on the driver, e.g. a decoded TSDB
+  block): the table is sorted in Arrow, handed to Spark once, and written
+  by one task — ``coalesce(1)`` with ``maxRecordsPerFile = ceil(rows /
+  N)`` cuts the sorted stream into consecutive files.  One Spark job, no
+  sample and no exchange.  ``num_files=None`` writes one file.
+
+Dictionary encoding is automatic; delta encoding comes with the Parquet V2
+writer; snappy/zstd via session config (session.py).
 
 At 100 TB, additionally partition the output directory by a coarse time
 bucket (``date``) for catalog-level partition pruning — ``bucket_col``.
@@ -26,14 +36,15 @@ bucket (``date``) for catalog-level partition pruning — ``bucket_col``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .timeseries import TIME_COL, label_columns
+from .timeseries import LABEL_PREFIX, TIME_COL, label_columns
 
 
 def write_sorted(
-    df: DataFrame,
+    df: DataFrame | pa.Table,
     path: str,
     num_files: int | None = None,
     labels: list[str] | None = None,
@@ -42,11 +53,21 @@ def write_sorted(
 ) -> None:
     """Write ``df`` in the reference's sorted time-series layout.
 
-    ``num_files`` controls the range-partition count (None → Spark default,
-    i.e. ``spark.sql.shuffle.partitions``; size so one file ≈ 128 MB-1 GB at
-    the target scale).  ``bucket_col`` adds a directory-level partition
-    column (e.g. a pre-computed date string) for partition pruning.
+    ``num_files`` is the output file count (None → for a DataFrame, Spark's
+    default range-partition count, i.e. ``spark.sql.shuffle.partitions``;
+    for an Arrow table, one file).  An Arrow table of ``rows`` rows gets
+    exactly ``num_files`` files whenever ``rows > (num_files - 1)**2``;
+    below that, every file holds ``ceil(rows / num_files)`` rows but the
+    last, so there may be fewer.  Size so one file ≈ 128 MB-1 GB at the
+    target scale.  ``bucket_col`` adds a directory-level partition column
+    (e.g. a pre-computed date string) for partition pruning; an Arrow
+    table with one takes the DataFrame recipe.
     """
+    if isinstance(df, pa.Table):
+        if bucket_col is None:
+            _write_arrow_sorted(df, path, num_files, labels, mode)
+            return
+        df = SparkSession.active().createDataFrame(df)
     labels = labels if labels is not None else label_columns(df)
     # nulls-first to mirror the reference's NullsFirst sorting columns
     # (hello.go:153).
@@ -61,6 +82,24 @@ def write_sorted(
     writer = out.write.mode(mode)
     if bucket_col:
         writer = writer.partitionBy(bucket_col)
+    writer.parquet(path)
+
+
+def _write_arrow_sorted(
+    table: pa.Table, path: str, num_files: int | None, labels: list[str] | None, mode: str,
+) -> None:
+    """The driver-resident recipe: the same (time, labels nulls-first) order,
+    sorted in Arrow, written by a single task in ``num_files`` consecutive
+    slices."""
+    if labels is None:
+        labels = sorted(c for c in table.column_names if c.startswith(LABEL_PREFIX))
+    table = table.sort_by(
+        [(TIME_COL, "ascending")] + [(c, "ascending") for c in labels],
+        null_placement="at_start",
+    )
+    writer = SparkSession.active().createDataFrame(table).coalesce(1).write.mode(mode)
+    if num_files and table.num_rows:
+        writer = writer.option("maxRecordsPerFile", -(-table.num_rows // num_files))
     writer.parquet(path)
 
 
