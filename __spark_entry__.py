@@ -53,6 +53,7 @@ from tsdb_parquet_spark.operators.joins import (
     fact_fact_join,
     interval_self_join,
 )
+from tsdb_parquet_spark.operators.partitioning import shuffle_partitions
 from tsdb_parquet_spark.operators.setops import (
     except_sorted,
     intersect_sorted,
@@ -66,7 +67,8 @@ from tsdb_parquet_spark.operators.windows import (
     top_k_per_group,
 )
 from tsdb_parquet_spark.streaming.windows import tumbling_counts_batch
-from tsdb_parquet_spark.tables import TSDB_PATH, load_table
+from tsdb_parquet_spark.sources import Layout, Rung, ensure_rung, route_at_rest
+from tsdb_parquet_spark.tables import TSDB_PATH, load_table, table_path
 from tsdb_parquet_spark.timeseries import (
     apply_matchers,
     ensure_hybrid_label_layout,
@@ -98,6 +100,21 @@ _TSDB_NH = f"read_parquet('{TSDB_NH_PATH}')"
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
+
+
+def _sf_tag(sf_dir: str) -> str:
+    """The sf dir's base name as an identifier — the suffix that keeps
+    per-scale at-rest tables and streaming query names apart."""
+    import re as _re
+
+    return _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+
+
+# Bucket count of the entry module's bucketed at-rest layouts: one per
+# local core — 16 left half the box idle (q09_bucketed's SMJ measured
+# 1.43 s at 16 vs 0.68 s at 32 on sf10); production sizes the bucket
+# count to cluster parallelism.
+_BUCKETS = 32
 
 
 # ---------------------------------------------------------------------------
@@ -170,14 +187,52 @@ def q06_series_regroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2.2 s fresh-built — any string-valued agg buffer forces
     # SortAggregate; SCALE.md round-7 negative result)
     tsdb = _t(spark, sf_dir, "tsdb")
-    return regroup_series_stats(
-        tsdb, ["label_name", "label_instance", "label_job", "label_quantile"]
-    ).orderBy("label_name", "label_instance", "label_job", F.asc_nulls_first("label_quantile"))
+    return _q06_order(regroup_series_stats(tsdb, _Q06_LABELS))
+
+
+_Q06_LABELS = ["label_name", "label_instance", "label_job", "label_quantile"]
+
+
+def _q06_order(df: DataFrame) -> DataFrame:
+    return df.orderBy(
+        "label_name", "label_instance", "label_job",
+        F.asc_nulls_first("label_quantile"),
+    )
+
+
+def _q06_rungs(spark: SparkSession, sf_dir: str) -> list:
+    """q06's at-rest ladder, top rung first: the materialized regroup
+    output, the int-key series-dim layout (facts AND dim), raw."""
+    from tsdb_parquet_spark.timeseries import (
+        regroup_series_stats_dim,
+        series_dim_layouts,
+    )
+
+    tag = _sf_tag(sf_dir)
+    mv = Layout(
+        f"q06mv_tsdb_{tag}",
+        lambda: regroup_series_stats(_t(spark, sf_dir, "tsdb"), _Q06_LABELS),
+        TSDB_PATH,
+    )
+    facts, dim = series_dim_layouts(
+        spark,
+        f"q06d_tsdb_{tag}",
+        lambda: _t(spark, sf_dir, "tsdb").select(*_Q06_LABELS, "time", "value"),
+        _Q06_LABELS,
+        num_buckets=_BUCKETS,
+        source_paths=TSDB_PATH,
+    )
+    return [
+        ("mv", [mv], _q06_order),
+        ("series_dim", [facts, dim],
+         lambda f, d: _q06_order(regroup_series_stats_dim(f, d))),
+        ("raw", [], lambda: q06_series_regroup(spark, sf_dir)),
+    ]
 
 
 def q06_series_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q06 over the series-dictionary at-rest layout
-    (timeseries.ensure_series_dim_layout) — the scale answer to the
+    (timeseries.series_dim_layouts) — the scale answer to the
     2.2 s raw-parquet regroup floor recorded in SCALE.md §5b: labels
     dictionary-encoded ONCE at ingest into an int series_id (the
     Prometheus series-ref model the reference regroups from,
@@ -193,27 +248,7 @@ def q06_series_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     whatever the key type), so do not adopt it expecting a win at
     every scale; when the regroup output itself is the repeated query,
     q06_mv (the materialized O(series) result) is the scale rung."""
-    import re as _re
-
-    from tsdb_parquet_spark.tables import TSDB_PATH
-    from tsdb_parquet_spark.timeseries import (
-        ensure_series_dim_layout,
-        regroup_series_stats_dim,
-    )
-
-    labels = ["label_name", "label_instance", "label_job", "label_quantile"]
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    facts, dim = ensure_series_dim_layout(
-        spark,
-        f"q06d_tsdb_{tag}",
-        lambda: _t(spark, sf_dir, "tsdb").select(*labels, "time", "value"),
-        labels,
-        source_paths=TSDB_PATH,
-    )
-    return regroup_series_stats_dim(facts, dim).orderBy(
-        "label_name", "label_instance", "label_job",
-        F.asc_nulls_first("label_quantile"),
-    )
+    return ensure_rung(spark, _q06_rungs(spark, sf_dir), "series_dim")
 
 
 def q06_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -227,24 +262,7 @@ def q06_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     q06_series_regroup — identical result, different at-rest strategy;
     completes q06's amortization ladder (raw regroup -> int-key
     series-dim layout -> materialized regroup output)."""
-    import re as _re
-
-    from tsdb_parquet_spark.sources import ensure_materialized
-    from tsdb_parquet_spark.tables import TSDB_PATH
-    from tsdb_parquet_spark.timeseries import regroup_series_stats
-
-    labels = ["label_name", "label_instance", "label_job", "label_quantile"]
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    mv = ensure_materialized(
-        spark,
-        f"q06mv_tsdb_{tag}",
-        lambda: regroup_series_stats(_t(spark, sf_dir, "tsdb"), labels),
-        source_paths=TSDB_PATH,
-    )
-    return mv.orderBy(
-        "label_name", "label_instance", "label_job",
-        F.asc_nulls_first("label_quantile"),
-    )
+    return ensure_rung(spark, _q06_rungs(spark, sf_dir), "mv")
 
 
 def q06_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -254,44 +272,7 @@ def q06_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim both committed), else the raw-parquet regroup.  Read-only
     resolution, q06's oracle, rung logged — see q09_auto for the
     routing contract."""
-    from tsdb_parquet_spark.sources import (
-        peek_bucketed_table,
-        peek_table,
-        route_at_rest,
-    )
-    from tsdb_parquet_spark.tables import TSDB_PATH
-    from tsdb_parquet_spark.timeseries import regroup_series_stats_dim
-
-    tag = _sf_tag(sf_dir)
-    order = [
-        "label_name", "label_instance", "label_job",
-        F.asc_nulls_first("label_quantile"),
-    ]
-
-    def _mv():
-        mv = peek_table(spark, f"q06mv_tsdb_{tag}", source_paths=TSDB_PATH)
-        return None if mv is None else mv.orderBy(*order)
-
-    def _dim():
-        dim = peek_table(
-            spark, f"q06d_tsdb_{tag}_dim", source_paths=TSDB_PATH
-        )
-        facts = peek_bucketed_table(
-            spark, f"q06d_tsdb_{tag}_facts", "series_id", num_buckets=32,
-            sort_col=["series_id", "time"], source_paths=TSDB_PATH,
-        )
-        if dim is None or facts is None:
-            return None
-        return regroup_series_stats_dim(facts, dim).orderBy(*order)
-
-    return route_at_rest(
-        "q06_auto",
-        [
-            ("mv", _mv),
-            ("series_dim", _dim),
-            ("raw", lambda: q06_series_regroup(spark, sf_dir)),
-        ],
-    )
+    return route_at_rest(spark, "q06_auto", _q06_rungs(spark, sf_dir))
 
 
 def q07_sorted_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -497,6 +478,39 @@ def q09_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _q09_rungs(spark: SparkSession, sf_dir: str) -> list[Rung]:
+    """q09's at-rest ladder, top rung first: the materialized aggregate,
+    the orderkey-bucketed orders + lineitem pair, the raw shuffle join."""
+    tag = _sf_tag(sf_dir)
+    mv = Layout(
+        f"q09mv_{tag}",
+        lambda: q09_join_agg(spark, sf_dir),
+        [table_path(sf_dir, t) for t in ("customer", "orders", "lineitem")],
+    )
+    orders_b = Layout(
+        f"q09b_orders_{tag}",
+        lambda: _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey"),
+        table_path(sf_dir, "orders"),
+        bucket_col="o_orderkey", num_buckets=_BUCKETS, sort_col="o_orderkey",
+    )
+    lineitem_b = Layout(
+        f"q09b_lineitem_{tag}",
+        lambda: _t(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_extendedprice", "l_discount"
+        ),
+        table_path(sf_dir, "lineitem"),
+        bucket_col="l_orderkey", num_buckets=_BUCKETS, sort_col="l_orderkey",
+    )
+    return [
+        ("mv", [mv], lambda t: t.orderBy("c_mktsegment")),
+        ("bucketed", [orders_b, lineitem_b],
+         lambda o, li: _q09_from(
+             _t(spark, sf_dir, "customer"), o, li, bucketed=True
+         )),
+        ("raw", [], lambda: q09_join_agg(spark, sf_dir)),
+    ]
+
+
 def q09_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q09 over the bucketed at-rest layout (sources.write_bucketed):
     orders and lineitem hash-bucketed AND sorted on the orderkey into 32
@@ -510,37 +524,12 @@ def q09_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     session materializes the bucketed tables (bucket metadata lives in
     the session catalog); measured timings take the steady state.
     Identical result + oracle as q09 — same query, different layout."""
-    import re as _re
-
-    from tsdb_parquet_spark.sources import ensure_bucketed_table
-
-    from tsdb_parquet_spark.tables import table_path
-
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    orders_b = ensure_bucketed_table(
-        spark,
-        f"q09b_orders_{tag}",
-        lambda: _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey"),
-        "o_orderkey", num_buckets=32, sort_col="o_orderkey",
-        source_paths=table_path(sf_dir, "orders"),
-    )
-    lineitem_b = ensure_bucketed_table(
-        spark,
-        f"q09b_lineitem_{tag}",
-        lambda: _t(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_extendedprice", "l_discount"
-        ),
-        "l_orderkey", num_buckets=32, sort_col="l_orderkey",
-        source_paths=table_path(sf_dir, "lineitem"),
-    )
-    return _q09_from(
-        _t(spark, sf_dir, "customer"), orders_b, lineitem_b, bucketed=True
-    )
+    return ensure_rung(spark, _q09_rungs(spark, sf_dir), "bucketed")
 
 
 def q09_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q09 served from a MATERIALIZED aggregate (sources.
-    ensure_materialized) — the production answer for dashboard-class
+    """q09 served from a MATERIALIZED aggregate (a plain sources.Layout
+    of the query result) — the production answer for dashboard-class
     repeated aggregates: the 3-way join + agg computes ONCE at rest
     (fingerprint-named, stale-on-source-change) and every subsequent
     query scans the 5-row result.  Same oracle as q09 — identical
@@ -549,34 +538,7 @@ def q09_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized aggregate).  rollup.py's mergeable-state continuous
     aggregates are the incremental-refresh generalization of this
     recompute-on-fingerprint-change form."""
-    import re as _re
-
-    from tsdb_parquet_spark.sources import ensure_materialized
-    from tsdb_parquet_spark.tables import table_path
-
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    mv = ensure_materialized(
-        spark,
-        f"q09mv_{tag}",
-        lambda: _q09_from(
-            _t(spark, sf_dir, "customer"),
-            _t(spark, sf_dir, "orders"),
-            _t(spark, sf_dir, "lineitem"),
-            bucketed=False,
-        ),
-        source_paths=[
-            table_path(sf_dir, "customer"),
-            table_path(sf_dir, "orders"),
-            table_path(sf_dir, "lineitem"),
-        ],
-    )
-    return mv.orderBy("c_mktsegment")
-
-
-def _sf_tag(sf_dir: str) -> str:
-    import re as _re
-
-    return _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    return ensure_rung(spark, _q09_rungs(spark, sf_dir), "mv")
 
 
 def q09_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -584,54 +546,15 @@ def q09_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     the q09 size-gate generalized into sources.route_at_rest): serve
     from the materialized aggregate if fingerprint-fresh, else the
     bucketed zero-exchange layout if committed, else the raw shuffle
-    join — resolved READ-ONLY (peek_table/peek_bucketed_table never
-    build; a missing rung costs one stat call).  The pinned q09/
+    join — resolved READ-ONLY (Layout.peek never builds; a missing
+    rung costs one stat call).  The pinned q09/
     q09_bucketed/q09_mv entries keep each rung individually measurable;
     this entry is the ENGINE's choice — what a catalog-backed lakehouse
     does when a materialized view matches a query subtree.  All rungs
     share q09's oracle (identical results by construction), so routing
     can change plans, never answers.  The chosen rung lands in
     sources.ROUTE_LOG and bench.py surfaces it in the output JSON."""
-    from tsdb_parquet_spark.sources import (
-        peek_bucketed_table,
-        peek_table,
-        route_at_rest,
-    )
-    from tsdb_parquet_spark.tables import table_path
-
-    tag = _sf_tag(sf_dir)
-    srcs = [
-        table_path(sf_dir, "customer"),
-        table_path(sf_dir, "orders"),
-        table_path(sf_dir, "lineitem"),
-    ]
-
-    def _mv():
-        mv = peek_table(spark, f"q09mv_{tag}", source_paths=srcs)
-        return None if mv is None else mv.orderBy("c_mktsegment")
-
-    def _bucketed():
-        ob = peek_bucketed_table(
-            spark, f"q09b_orders_{tag}", "o_orderkey", num_buckets=32,
-            sort_col="o_orderkey", source_paths=table_path(sf_dir, "orders"),
-        )
-        lb = peek_bucketed_table(
-            spark, f"q09b_lineitem_{tag}", "l_orderkey", num_buckets=32,
-            sort_col="l_orderkey",
-            source_paths=table_path(sf_dir, "lineitem"),
-        )
-        if ob is None or lb is None:
-            return None
-        return _q09_from(_t(spark, sf_dir, "customer"), ob, lb, bucketed=True)
-
-    return route_at_rest(
-        "q09_auto",
-        [
-            ("mv", _mv),
-            ("bucketed", _bucketed),
-            ("raw", lambda: q09_join_agg(spark, sf_dir)),
-        ],
-    )
+    return route_at_rest(spark, "q09_auto", _q09_rungs(spark, sf_dir))
 
 
 def q16_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -639,29 +562,7 @@ def q16_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     committed (the pair exchange vanishes — sf100 1.35 s vs 13.2 s
     raw), else raw.  Read-only resolution, q16's oracle, rung logged —
     see q09_auto for the routing contract."""
-    from tsdb_parquet_spark.sources import peek_bucketed_table, route_at_rest
-    from tsdb_parquet_spark.tables import table_path
-
-    tag = _sf_tag(sf_dir)
-
-    def _bucketed():
-        eb = peek_bucketed_table(
-            spark, f"q16b_events_{tag}", "user_id", num_buckets=32,
-            sort_col="user_id", source_paths=table_path(sf_dir, "events"),
-        )
-        if eb is None:
-            return None
-        return exact_count_distinct(
-            eb, ["event_type"], "user_id", "u"
-        ).orderBy("event_type")
-
-    return route_at_rest(
-        "q16_auto",
-        [
-            ("bucketed", _bucketed),
-            ("raw", lambda: q16_count_distinct(spark, sf_dir)),
-        ],
-    )
+    return route_at_rest(spark, "q16_auto", _q16_rungs(spark, sf_dir))
 
 
 def q10_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -697,7 +598,10 @@ def q13_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q14_interval_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    return _q14_pair_counts(_t(spark, sf_dir, "events"))
+
+
+def _q14_pair_counts(events: DataFrame) -> DataFrame:
     pairs = interval_self_join(events, key="user_id", ts_col="ts", interval_expr="INTERVAL 5 MINUTES")
     return (
         pairs.groupBy(F.col("e1.user_id").alias("user_id"))
@@ -737,8 +641,25 @@ def q15_multi_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q16_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _t(spark, sf_dir, "events")
+    return _q16_from(_t(spark, sf_dir, "events"))
+
+
+def _q16_from(events: DataFrame) -> DataFrame:
     return exact_count_distinct(events, ["event_type"], "user_id", "u").orderBy("event_type")
+
+
+def _q16_rungs(spark: SparkSession, sf_dir: str) -> list[Rung]:
+    """q16's at-rest ladder: the user-bucketed events slice, raw."""
+    events_b = Layout(
+        f"q16b_events_{_sf_tag(sf_dir)}",
+        lambda: _t(spark, sf_dir, "events").select("user_id", "event_type"),
+        table_path(sf_dir, "events"),
+        bucket_col="user_id", num_buckets=_BUCKETS, sort_col="user_id",
+    )
+    return [
+        ("bucketed", [events_b], _q16_from),
+        ("raw", [], lambda: q16_count_distinct(spark, sf_dir)),
+    ]
 
 
 def q16_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -756,24 +677,7 @@ def q16_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     once and amortized — the q09_bucketed/q28_bucketed ladder applied
     to the distinct-aggregate family.  Identical result + oracle as
     q16."""
-    import re as _re
-
-    from tsdb_parquet_spark.sources import ensure_bucketed_table
-    from tsdb_parquet_spark.tables import table_path
-
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    events_b = ensure_bucketed_table(
-        spark,
-        f"q16b_events_{tag}",
-        lambda: _t(spark, sf_dir, "events").select("user_id", "event_type"),
-        "user_id",
-        num_buckets=32,
-        sort_col="user_id",
-        source_paths=table_path(sf_dir, "events"),
-    )
-    return exact_count_distinct(
-        events_b, ["event_type"], "user_id", "u"
-    ).orderBy("event_type")
+    return ensure_rung(spark, _q16_rungs(spark, sf_dir), "bucketed")
 
 
 def q17_rollup_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -933,6 +837,42 @@ def q28_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _events_by_user(spark: SparkSession, sf_dir: str) -> Layout:
+    """The user-bucketed (user_id, ts, event_id) events slice — ONE
+    layout serving two families (q28 sessionization, q14 pairs)."""
+    return Layout(
+        f"q28b_events_{_sf_tag(sf_dir)}",
+        lambda: _t(spark, sf_dir, "events").select("user_id", "ts", "event_id"),
+        table_path(sf_dir, "events"),
+        bucket_col="user_id", num_buckets=_BUCKETS,
+        sort_col=["user_id", "ts", "event_id"],
+    )
+
+
+def _q28_sessions_bucketed(events_b: DataFrame) -> DataFrame:
+    s = sessionize(events_b, "user_id", "ts", "event_id", gap_seconds=1800, pin=False)
+    return (
+        s.groupBy("user_id")
+        .agg(F.max("session_id").alias("sessions"))
+        .orderBy("user_id")
+    )
+
+
+def _q28_rungs(spark: SparkSession, sf_dir: str) -> list[Rung]:
+    return [
+        ("bucketed", [_events_by_user(spark, sf_dir)], _q28_sessions_bucketed),
+        ("raw", [], lambda: q28_session_windows(spark, sf_dir)),
+    ]
+
+
+def _q14_rungs(spark: SparkSession, sf_dir: str) -> list[Rung]:
+    return [
+        ("bucketed", [_events_by_user(spark, sf_dir)],
+         lambda eb: _q14_pair_counts(eb.select("user_id", "ts"))),
+        ("raw", [], lambda: q14_interval_self_join(spark, sf_dir)),
+    ]
+
+
 def q28_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q28 sessionization over a user-bucketed at-rest events layout —
     the event-analytics counterpart of q09_bucketed/q35_bucketed: the
@@ -941,27 +881,7 @@ def q28_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ZERO exchanges (``pin=False``) — at 100 TB the per-query
     re-shuffle of the event stream is the dominant sessionization cost
     and this moves it to ingest.  Identical result + oracle as q28."""
-    import re as _re
-
-    from tsdb_parquet_spark.sources import ensure_bucketed_table
-    from tsdb_parquet_spark.tables import table_path
-
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    events_b = ensure_bucketed_table(
-        spark,
-        f"q28b_events_{tag}",
-        lambda: _t(spark, sf_dir, "events").select("user_id", "ts", "event_id"),
-        "user_id",
-        num_buckets=32,
-        sort_col=["user_id", "ts", "event_id"],
-        source_paths=table_path(sf_dir, "events"),
-    )
-    s = sessionize(events_b, "user_id", "ts", "event_id", gap_seconds=1800, pin=False)
-    return (
-        s.groupBy("user_id")
-        .agg(F.max("session_id").alias("sessions"))
-        .orderBy("user_id")
-    )
+    return ensure_rung(spark, _q28_rungs(spark, sf_dir), "bucketed")
 
 
 def q14_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -974,44 +894,7 @@ def q14_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned joins — and the final per-user aggregate consumes the
     same partitioning: the whole plan runs with ZERO hash exchanges
     (plan-asserted).  Identical result + oracle as q14."""
-    import re as _re
-
-    from tsdb_parquet_spark.sources import ensure_bucketed_table
-    from tsdb_parquet_spark.tables import table_path
-
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    events_b = ensure_bucketed_table(
-        spark,
-        f"q28b_events_{tag}",
-        lambda: _t(spark, sf_dir, "events").select("user_id", "ts", "event_id"),
-        "user_id",
-        num_buckets=32,
-        sort_col=["user_id", "ts", "event_id"],
-        source_paths=table_path(sf_dir, "events"),
-    )
-    pairs = interval_self_join(
-        events_b.select("user_id", "ts"),
-        key="user_id", ts_col="ts", interval_expr="INTERVAL 5 MINUTES",
-    )
-    return (
-        pairs.groupBy(F.col("e1.user_id").alias("user_id"))
-        .agg(F.count(F.lit(1)).alias("pairs"))
-        .orderBy("user_id")
-    )
-
-
-def _peek_events_bucketed(spark: SparkSession, sf_dir: str):
-    """READ-ONLY probe for the shared user-bucketed events layout
-    (built by q28_bucketed/q14_bucketed — one layout, two families)."""
-    from tsdb_parquet_spark.sources import peek_bucketed_table
-    from tsdb_parquet_spark.tables import table_path
-
-    tag = _sf_tag(sf_dir)
-    return peek_bucketed_table(
-        spark, f"q28b_events_{tag}", "user_id", num_buckets=32,
-        sort_col=["user_id", "ts", "event_id"],
-        source_paths=table_path(sf_dir, "events"),
-    )
+    return ensure_rung(spark, _q14_rungs(spark, sf_dir), "bucketed")
 
 
 def q28_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1019,28 +902,7 @@ def q28_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     user-bucketed events layout if committed (sessionize consumes the
     bucket partitioning, zero exchanges), else raw.  Read-only
     resolution, q28's oracle, rung logged — see q09_auto."""
-    from tsdb_parquet_spark.sources import route_at_rest
-
-    def _bucketed():
-        eb = _peek_events_bucketed(spark, sf_dir)
-        if eb is None:
-            return None
-        s = sessionize(
-            eb, "user_id", "ts", "event_id", gap_seconds=1800, pin=False
-        )
-        return (
-            s.groupBy("user_id")
-            .agg(F.max("session_id").alias("sessions"))
-            .orderBy("user_id")
-        )
-
-    return route_at_rest(
-        "q28_auto",
-        [
-            ("bucketed", _bucketed),
-            ("raw", lambda: q28_session_windows(spark, sf_dir)),
-        ],
-    )
+    return route_at_rest(spark, "q28_auto", _q28_rungs(spark, sf_dir))
 
 
 def q14_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1048,29 +910,7 @@ def q14_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     events layout as q28_auto (both join sides co-partitioned on
     user_id — zero hash exchanges), else raw.  Read-only resolution,
     q14's oracle, rung logged."""
-    from tsdb_parquet_spark.sources import route_at_rest
-
-    def _bucketed():
-        eb = _peek_events_bucketed(spark, sf_dir)
-        if eb is None:
-            return None
-        pairs = interval_self_join(
-            eb.select("user_id", "ts"),
-            key="user_id", ts_col="ts", interval_expr="INTERVAL 5 MINUTES",
-        )
-        return (
-            pairs.groupBy(F.col("e1.user_id").alias("user_id"))
-            .agg(F.count(F.lit(1)).alias("pairs"))
-            .orderBy("user_id")
-        )
-
-    return route_at_rest(
-        "q14_auto",
-        [
-            ("bucketed", _bucketed),
-            ("raw", lambda: q14_interval_self_join(spark, sf_dir)),
-        ],
-    )
+    return route_at_rest(spark, "q14_auto", _q14_rungs(spark, sf_dir))
 
 
 def q85_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1084,8 +924,6 @@ def q85_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark drops nothing and complete-mode output equals the batch
     aggregate exactly (the late-data policy only engages on multi-batch
     arrival order, exercised in tests/test_streaming.py)."""
-    import re as _re
-
     from tsdb_parquet_spark.streaming.windows import tumbling_counts
     from tsdb_parquet_spark.tables import _normalize_ns_timestamps, table_path
 
@@ -1100,9 +938,7 @@ def q85_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         reader = reader.option("pathGlobFilter", os.path.basename(path))
         path = os.path.dirname(path)
     stream = _normalize_ns_timestamps(reader.parquet(path))
-    name = "q85_mem_" + _re.sub(
-        r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    )
+    name = "q85_mem_" + _sf_tag(sf_dir)
     for q in spark.streams.active:  # re-entrant within one session
         if q.name == name:
             q.stop()
@@ -1141,7 +977,6 @@ def q86_streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame
     is only possible if each batch resumed the previous batches' state.
     The running-total sum is order-independent (exact integer-valued
     doubles), so a plain repartition split suffices."""
-    import re as _re
     import shutil
     import tempfile
 
@@ -1149,7 +984,7 @@ def q86_streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame
     from tsdb_parquet_spark.tables import load_table
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    tag = _sf_tag(sf_dir)
     split_dir = os.path.join(tempfile.gettempdir(), f"tsdb_spark_q86_{tag}__src")
     shutil.rmtree(split_dir, ignore_errors=True)
     load_table(spark, sf_dir, "events").select(
@@ -1226,16 +1061,14 @@ def q90_streaming_counter_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-micro-batch state carry of the (last_value, increase)
     recurrence itself.  Late-sample drop and staleness eviction stay
     pytest-exercised."""
-    import re as _re
     import shutil
     import tempfile
 
     from tsdb_parquet_spark.streaming.stateful import streaming_counter_rate
     from tsdb_parquet_spark.streaming.windows import drain_available_now
-    from tsdb_parquet_spark.tables import TSDB_PATH
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    tag = _sf_tag(sf_dir)
     split_dir = os.path.join(tempfile.gettempdir(), f"tsdb_spark_q90_{tag}__src")
     shutil.rmtree(split_dir, ignore_errors=True)
     os.makedirs(split_dir)
@@ -1317,6 +1150,9 @@ def q29_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return llm.text_quality(docs).orderBy("doc_id")
 
 
+_Q91_TERMS = ["join", "window", "hash"]
+
+
 def q91_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 lexical ranking over the documents corpus — the retrieval
     complement to the embedding-ANN surface (llm/ranking.bm25_rank):
@@ -1326,28 +1162,37 @@ def q91_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tsdb_parquet_spark.llm.ranking import bm25_rank
 
     docs = _t(spark, sf_dir, "documents")
-    return bm25_rank(docs, ["join", "window", "hash"], top_k=20)
+    return bm25_rank(docs, _Q91_TERMS, top_k=20)
+
+
+def _q91_rungs(spark: SparkSession, sf_dir: str) -> list[Rung]:
+    """q91's at-rest ladder: the persisted inverted index (postings AND
+    stats), raw tokenize-and-score."""
+    from tsdb_parquet_spark.llm.ranking import (
+        bm25_index_layouts,
+        bm25_rank_indexed,
+    )
+
+    index = bm25_index_layouts(
+        f"bm25_idx_{_sf_tag(sf_dir)}",
+        lambda: _t(spark, sf_dir, "documents"),
+        source_paths=table_path(sf_dir, "documents"),
+    )
+    return [
+        ("indexed", list(index),
+         lambda post, stats: bm25_rank_indexed(post, stats, _Q91_TERMS, top_k=20)),
+        ("raw", [], lambda: q91_bm25_rank(spark, sf_dir)),
+    ]
 
 
 def q91_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q91 served from a PERSISTED inverted index (llm/ranking.
-    bm25_rank_indexed): postings bucketed+sorted by term at rest, corpus
+    bm25_index_layouts): postings bucketed+sorted by term at rest, corpus
     stats alongside — query-time work is a bucket-pruned read of |Q|
     terms' postings plus the shared scoring tail; no tokenization per
     query.  Same oracle as q91 (identical arithmetic, different at-rest
     strategy) — the q09_mv amortization pattern applied to retrieval."""
-    import re as _re
-
-    from tsdb_parquet_spark.llm.ranking import bm25_rank_indexed
-    from tsdb_parquet_spark.tables import table_path
-
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    return bm25_rank_indexed(
-        spark, f"bm25_idx_{tag}",
-        lambda: _t(spark, sf_dir, "documents"),
-        ["join", "window", "hash"], top_k=20,
-        source_paths=table_path(sf_dir, "documents"),
-    )
+    return ensure_rung(spark, _q91_rungs(spark, sf_dir), "indexed")
 
 
 def q91_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1355,27 +1200,8 @@ def q91_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted index (postings + stats, BOTH fingerprint-fresh) if
     committed — a bucket-pruned read of |Q| terms' postings, no
     query-time tokenization — else the raw tokenize-and-score path.
-    Read-only resolution (llm/ranking.bm25_rank_indexed_peek), q91's
-    oracle, rung logged."""
-    from tsdb_parquet_spark.llm.ranking import bm25_rank_indexed_peek
-    from tsdb_parquet_spark.sources import route_at_rest
-    from tsdb_parquet_spark.tables import table_path
-
-    tag = _sf_tag(sf_dir)
-
-    def _indexed():
-        return bm25_rank_indexed_peek(
-            spark, f"bm25_idx_{tag}", ["join", "window", "hash"],
-            top_k=20, source_paths=table_path(sf_dir, "documents"),
-        )
-
-    return route_at_rest(
-        "q91_auto",
-        [
-            ("indexed", _indexed),
-            ("raw", lambda: q91_bm25_rank(spark, sf_dir)),
-        ],
-    )
+    Read-only resolution, q91's oracle, rung logged."""
+    return route_at_rest(spark, "q91_auto", _q91_rungs(spark, sf_dir))
 
 
 def q30b_asof_directions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1454,8 +1280,6 @@ def q103_streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     flush them — SCALE.md §5h).  The oracle ENCODES the rule: matched
     pairs UNION unmatched views whose bound clears the final
     watermark."""
-    import re as _re
-
     from tsdb_parquet_spark.streaming.windows import stream_interval_join
     from tsdb_parquet_spark.tables import _normalize_ns_timestamps, table_path
 
@@ -1468,9 +1292,7 @@ def q103_streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         reader = reader.option("pathGlobFilter", os.path.basename(path))
         path = os.path.dirname(path)
     stream = _normalize_ns_timestamps(reader.parquet(path))
-    name = "q103_mem_" + _re.sub(
-        r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    )
+    name = "q103_mem_" + _sf_tag(sf_dir)
     for q in spark.streams.active:  # re-entrant within one session
         if q.name == name:
             q.stop()
@@ -1722,8 +1544,6 @@ def q100_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     session_window's exact boundary semantics: an event at EXACTLY
     prev_ts + gap still merges (break is strictly ``>``), and
     session_end = last event + gap."""
-    import re as _re
-
     from tsdb_parquet_spark.streaming.windows import session_counts
     from tsdb_parquet_spark.tables import _normalize_ns_timestamps, table_path
 
@@ -1738,9 +1558,7 @@ def q100_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _normalize_ns_timestamps(reader.parquet(path)).select(
         "user_id", "ts"
     )
-    name = "q100_mem_" + _re.sub(
-        r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    )
+    name = "q100_mem_" + _sf_tag(sf_dir)
     for q in spark.streams.active:  # re-entrant within one session
         if q.name == name:
             q.stop()
@@ -1768,8 +1586,6 @@ def q101_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     eagerly, so the append-mode memory table after one availableNow
     replay equals the batch interval join exactly — the plain-SQL
     oracle."""
-    import re as _re
-
     from tsdb_parquet_spark.streaming.windows import stream_interval_join
     from tsdb_parquet_spark.tables import _normalize_ns_timestamps, table_path
 
@@ -1784,9 +1600,7 @@ def q101_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _normalize_ns_timestamps(reader.parquet(path))
     left = stream.filter(F.col("event_type") == "view")
     right = stream.filter(F.col("event_type") == "click")
-    name = "q101_mem_" + _re.sub(
-        r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    )
+    name = "q101_mem_" + _sf_tag(sf_dir)
     for q in spark.streams.active:  # re-entrant within one session
         if q.name == name:
             q.stop()
@@ -1971,23 +1785,16 @@ def q35_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     → window → agg, measured 2.5 s → 1.1 s at sf10).  One write-time
     shuffle amortized over every subsequent per-series query.  Identical
     result + oracle as q35."""
-    import re as _re
-
-    from tsdb_parquet_spark.sources import ensure_bucketed_table
-    from tsdb_parquet_spark.tables import TSDB_PATH
-
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    tsdb_b = ensure_bucketed_table(
-        spark,
-        f"q35b_tsdb_{tag}",
+    tsdb_b = Layout(
+        f"q35b_tsdb_{_sf_tag(sf_dir)}",
         lambda: _t(spark, sf_dir, "tsdb")
         .filter(F.col("label_name") == "prometheus_http_requests_total")
         .select("label_handler", "label_code", "time", "value"),
-        ["label_handler", "label_code"],
+        TSDB_PATH,
+        bucket_col=["label_handler", "label_code"],
         num_buckets=8,
         sort_col=["label_handler", "label_code", "time"],
-        source_paths=TSDB_PATH,
-    )
+    ).ensure(spark)
     out = counter_rate(tsdb_b, ["label_handler", "label_code"], pin=False)
     return out.orderBy("label_handler", "label_code")
 
@@ -2993,23 +2800,19 @@ def llm_ann_ivf_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     PartitionFilters plan-asserted in tests) then exact-reranks.  The
     at-rest rung of the ANN ladder: brute-force scan → filtered scan
     (llm_ann_ivf) → pruned partitions (this)."""
-    import re as _re
-
-    from tsdb_parquet_spark.tables import table_path
-
     emb_path = table_path(sf_dir, "embeddings")
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    name = f"ann_ivf_{_sf_tag(sf_dir)}"
     qvec = (
         _t(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") == 0).select("embedding").first()[0]
     )
     llm.ensure_ivf_layout(
-        spark, f"ann_ivf_{tag}",
+        spark, name,
         lambda: _t(spark, sf_dir, "embeddings"),
         dim=len(qvec), num_centroids=8, source_paths=emb_path,
     )
     return llm.ivf_topk_at_rest(
-        spark, f"ann_ivf_{tag}", qvec, k=5, nprobe=3, source_paths=emb_path
+        spark, name, qvec, k=5, nprobe=3, source_paths=emb_path
     )
 
 
@@ -3120,8 +2923,6 @@ def q88_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-unit scaled for hash stability.  Scale: dedup state is one
     entry per key within the watermark horizon — the bounded-state
     streaming counterpart of exact_dedup (llm/dedup.py)."""
-    import re as _re
-
     from tsdb_parquet_spark.streaming.windows import (
         drain_available_now,
         stream_dedup,
@@ -3150,9 +2951,7 @@ def q88_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("v_units"),
     )
-    name = "q88_mem_" + _re.sub(
-        r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    )
+    name = "q88_mem_" + _sf_tag(sf_dir)
     for q in spark.streams.active:  # re-entrant within one session
         if q.name == name:
             q.stop()
@@ -3327,29 +3126,24 @@ def q114_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r14 — verdict r13 #3: the largest un-twinned LLM cost, sf100
     73.6 s raw).  ``gopher_metrics`` (the expensive text pass —
     threshold-INDEPENDENT integer counters) persists once under the
-    corpus content fingerprint (ensure_materialized staleness
+    corpus content fingerprint (sources.Layout staleness
     contract); the rule battery then re-evaluates thresholds over the
     O(docs) metrics table — a pruned scan plus scalar arithmetic, no
     text re-read.  Re-tuning cut lines (the common iteration loop in
     corpus curation) costs a metrics-table scan at ANY corpus size.
     SAME oracle as q114: identical stage-3 expressions over identical
     integer counters, so scan-served == recomputed bit-for-bit."""
-    import re as _re
-
     from tsdb_parquet_spark.llm.text import (
         gopher_metrics,
         gopher_rules_from_metrics,
     )
-    from tsdb_parquet_spark.sources import ensure_materialized
-    from tsdb_parquet_spark.tables import table_path
 
     docs = _t(spark, sf_dir, "documents")
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    mv = ensure_materialized(
-        spark, f"docgm114_{tag}",
+    mv = Layout(
+        f"docgm114_{_sf_tag(sf_dir)}",
         lambda: gopher_metrics(docs),
-        source_paths=table_path(sf_dir, "documents"),
-    )
+        table_path(sf_dir, "documents"),
+    ).ensure(spark)
     return gopher_rules_from_metrics(
         mv, min_words=30, max_mean_word_len=5.0, min_stopwords=1
     )
@@ -3418,8 +3212,6 @@ def q117_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolls up counts + exact decimal sums per (segment, event type).
     Replayed availableNow into a memory sink; complete-mode output
     equals the plain batch join+aggregate oracle exactly."""
-    import re as _re
-
     from tsdb_parquet_spark.streaming.windows import stream_static_enrich
     from tsdb_parquet_spark.tables import _normalize_ns_timestamps, table_path
 
@@ -3433,9 +3225,7 @@ def q117_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         path = os.path.dirname(path)
     stream = _normalize_ns_timestamps(reader.parquet(path))
     customer = _t(spark, sf_dir, "customer")
-    name = "q117_mem_" + _re.sub(
-        r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    )
+    name = "q117_mem_" + _sf_tag(sf_dir)
     for q in spark.streams.active:  # re-entrant within one session
         if q.name == name:
             q.stop()
@@ -3526,7 +3316,6 @@ def q121_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     that is correct on object stores with no atomic rename) — instead
     of the rename-swap sink, which remains the rename-capable-FS path
     with its own pytest suite (tests/test_r8_ops.py)."""
-    import re as _re
     import shutil
     import tempfile
 
@@ -3537,7 +3326,7 @@ def q121_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tsdb_parquet_spark.tables import load_table
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    tag = _sf_tag(sf_dir)
     base = os.path.join(tempfile.gettempdir(), f"tsdb_spark_upsert_{tag}")
     shutil.rmtree(base, ignore_errors=True)
     # replay copy split into 3 files -> 3 micro-batches under
@@ -3747,23 +3536,12 @@ def q129_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q129_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q129 served from a MATERIALIZED (source, term, tf) token-count
-    table (sources.ensure_materialized, fingerprint-named,
-    stale-on-source-change) — the q09_mv amortization ladder extended
-    to the LLM surface: the corpus tokenize+count pass (the 14.5 s
-    floor of q129 at sf10) computes ONCE at rest; TF-IDF, and any other
-    lexical query over the same counts, then runs on vocabulary-sized
-    input.  Same oracle as q129."""
-    import re as _re
-
+def _q129_rungs(spark: SparkSession, sf_dir: str) -> list[Rung]:
+    """q129's at-rest ladder: the materialized (source, term, tf) count
+    table, raw."""
     from tsdb_parquet_spark.llm.text import tfidf_top_terms
-    from tsdb_parquet_spark.sources import ensure_materialized
-    from tsdb_parquet_spark.tables import table_path
 
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-
-    def _build():
+    def _counts():
         docs = _t(spark, sf_dir, "documents")
         toks = F.filter(
             F.split(F.lower(F.col("text")), "[ \\t\\n\\r\\f]+"),
@@ -3775,17 +3553,35 @@ def q129_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("tf"))
         )
 
-    tf = ensure_materialized(
-        spark, f"q129tc_{tag}", _build,
-        source_paths=table_path(sf_dir, "documents"),
+    def _serve(tf):
+        # N counted from the DOCUMENT table, same as the primary path — an
+        # all-empty source must still count toward every IDF (advice r9)
+        n_groups = (
+            _t(spark, sf_dir, "documents").select("source").distinct().count()
+        )
+        out = tfidf_top_terms(None, k=10, tf_df=tf, n_groups=n_groups)
+        return out.withColumn("rank", F.col("rank").cast("bigint")).orderBy(
+            "source", "rank"
+        )
+
+    mv = Layout(
+        f"q129tc_{_sf_tag(sf_dir)}", _counts, table_path(sf_dir, "documents")
     )
-    # N counted from the DOCUMENT table, same as the primary path — an
-    # all-empty source must still count toward every IDF (advice r9)
-    n_groups = _t(spark, sf_dir, "documents").select("source").distinct().count()
-    out = tfidf_top_terms(None, k=10, tf_df=tf, n_groups=n_groups)
-    return out.withColumn("rank", F.col("rank").cast("bigint")).orderBy(
-        "source", "rank"
-    )
+    return [
+        ("mv", [mv], _serve),
+        ("raw", [], lambda: q129_tfidf_topterms(spark, sf_dir)),
+    ]
+
+
+def q129_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """q129 served from a MATERIALIZED (source, term, tf) token-count
+    table (a fingerprint-named sources.Layout,
+    stale-on-source-change) — the q09_mv amortization ladder extended
+    to the LLM surface: the corpus tokenize+count pass (the 14.5 s
+    floor of q129 at sf10) computes ONCE at rest; TF-IDF, and any other
+    lexical query over the same counts, then runs on vocabulary-sized
+    input.  Same oracle as q129."""
+    return ensure_rung(spark, _q129_rungs(spark, sf_dir), "mv")
 
 
 def q130_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3875,14 +3671,13 @@ def _heartbeat_event_stream(spark: SparkSession, sf_dir: str, tmp_prefix: str):
     delivers exactly the same row set to the same plan, so the flush
     semantics and the oracle result are unchanged.  Returns
     (stream, tag)."""
-    import re as _re
     import shutil
     import tempfile
 
     from tsdb_parquet_spark.streaming.windows import append_heartbeat
     from tsdb_parquet_spark.tables import _normalize_ns_timestamps, table_path
 
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    tag = _sf_tag(sf_dir)
     path = table_path(sf_dir, "events")
     raw_schema = spark.read.parquet(path).schema
     reader = spark.readStream.schema(raw_schema)
@@ -3971,32 +3766,92 @@ def q136_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bigram_logprob(docs)
 
 
-def _doc_token_counts_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _doc_tokens(spark: SparkSession, sf_dir: str) -> Layout:
     """The SHARED at-rest tokenize pass (r11, verdict #1): ONE
     materialized per-document token-count table (doc_id, source, w, c)
-    — llm/text.doc_token_counts through sources.ensure_materialized
-    (fingerprint-named, stale-on-source-change) — serves every
-    unigram-statistics query (q104_mv, q132_mv; tfidf's q129_mv keeps
-    its smaller per-source table).  The regex split + explode floor
-    that dominates the raw token family at sf10 (SCALE.md §5l) is paid
-    once here, not per query."""
-    import re as _re
-
+    — llm/text.doc_token_counts as a fingerprint-named sources.Layout
+    (stale-on-source-change) — serves every unigram-statistics query
+    (q104_mv, q132_mv, q152_mv; tfidf's q129_mv keeps its smaller
+    per-source table).  The regex split + explode floor that dominates
+    the raw token family at sf10 (SCALE.md §5l) is paid once here, not
+    per query."""
     from tsdb_parquet_spark.llm.text import doc_token_counts
-    from tsdb_parquet_spark.sources import ensure_materialized
-    from tsdb_parquet_spark.tables import table_path
 
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    return ensure_materialized(
-        spark, f"doctok_{tag}",
+    return Layout(
+        f"doctok_{_sf_tag(sf_dir)}",
         lambda: doc_token_counts(_t(spark, sf_dir, "documents")),
-        source_paths=table_path(sf_dir, "documents"),
+        table_path(sf_dir, "documents"),
     )
+
+
+def _q104_rungs(spark: SparkSession, sf_dir: str) -> list[Rung]:
+    """q104's at-rest ladder: the per-doc SCORE table (a pruned scan),
+    the shared token-count mv (re-aggregate, no re-tokenize), raw."""
+    sv = Layout(
+        f"docsv104_{_sf_tag(sf_dir)}",
+        lambda: q104_unigram_logprob(spark, sf_dir),
+        table_path(sf_dir, "documents"),
+    )
+    return [
+        ("sv", [sv], lambda t: t),
+        ("mv", [_doc_tokens(spark, sf_dir)],
+         lambda counts: llm.unigram_logprob(
+             None, vocab_size=200, counts_df=counts
+         )),
+        ("raw", [], lambda: q104_unigram_logprob(spark, sf_dir)),
+    ]
+
+
+def _q132_rungs(spark: SparkSession, sf_dir: str) -> list[Rung]:
+    from tsdb_parquet_spark.llm.text import lexical_stats
+
+    return [
+        ("mv", [_doc_tokens(spark, sf_dir)],
+         lambda counts: lexical_stats(None, counts_df=counts).orderBy("source")),
+        ("raw", [], lambda: q132_lexical_stats(spark, sf_dir)),
+    ]
+
+
+def _q136_rungs(spark: SparkSession, sf_dir: str) -> list[Rung]:
+    """q136's at-rest ladder: the per-doc BIGRAM-count table (the
+    order-preserving twin — unigram counts cannot reconstruct
+    adjacency), raw."""
+    from tsdb_parquet_spark.llm.text import bigram_logprob, doc_bigram_counts
+
+    bigrams = Layout(
+        f"docbg_{_sf_tag(sf_dir)}",
+        lambda: doc_bigram_counts(_t(spark, sf_dir, "documents")),
+        table_path(sf_dir, "documents"),
+    )
+    return [
+        ("mv", [bigrams], lambda bc: bigram_logprob(None, counts_df=bc)),
+        ("raw", [], lambda: q136_bigram_logprob(spark, sf_dir)),
+    ]
+
+
+def _q152_rungs(spark: SparkSession, sf_dir: str) -> list[Rung]:
+    """q152's at-rest ladder: the SHARED token-count mv (two filters
+    over one at-rest scan — the raw path's two tokenize passes never
+    run), raw."""
+    from tsdb_parquet_spark.llm.corpus import dsir_select
+
+    def _serve(counts):
+        out = dsir_select(
+            None, None, k=25, n_buckets=1024,
+            raw_counts=counts.filter(F.col("source") != "src0"),
+            target_counts=counts.filter(F.col("source") == "src0"),
+        )
+        return out.orderBy(F.desc("lr_units"), "doc_id")
+
+    return [
+        ("mv", [_doc_tokens(spark, sf_dir)], _serve),
+        ("raw", [], lambda: q152_dsir_select(spark, sf_dir)),
+    ]
 
 
 def q104_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q104 served from the materialized per-doc token-count table
-    (_doc_token_counts_mv): the LM build re-aggregates the stored
+    (_doc_tokens): the LM build re-aggregates the stored
     counts and the per-doc fold weights each distinct token by its
     multiplicity — integer-identical to the raw path (every q104
     statistic is a sum over token multiplicities), SAME oracle.  The
@@ -4006,8 +3861,7 @@ def q104_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange moves every per-doc row a second time; the driver hash is
     row-order-insensitive (in-process sf10 A/B: 9.85 -> 5.13 s, -48%,
     digest-identical)."""
-    counts = _doc_token_counts_mv(spark, sf_dir)
-    return llm.unigram_logprob(None, vocab_size=200, counts_df=counts)
+    return ensure_rung(spark, _q104_rungs(spark, sf_dir), "mv")
 
 
 def q132_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4015,10 +3869,7 @@ def q132_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     q104_mv: per-(source, token) counts are one vocabulary-sized
     re-aggregate of the stored multiplicities — integer-identical to
     the raw path, SAME oracle."""
-    from tsdb_parquet_spark.llm.text import lexical_stats
-
-    counts = _doc_token_counts_mv(spark, sf_dir)
-    return lexical_stats(None, counts_df=counts).orderBy("source")
+    return ensure_rung(spark, _q132_rungs(spark, sf_dir), "mv")
 
 
 def q136_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4030,47 +3881,14 @@ def q136_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     lead() window runs once at materialization, never at query time.
     No final orderBy (r15, the q104_mv rationale — sf10 A/B -23%,
     digest-identical)."""
-    import re as _re
-
-    from tsdb_parquet_spark.llm.text import bigram_logprob, doc_bigram_counts
-    from tsdb_parquet_spark.sources import ensure_materialized
-    from tsdb_parquet_spark.tables import table_path
-
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    bc = ensure_materialized(
-        spark, f"docbg_{tag}",
-        lambda: doc_bigram_counts(_t(spark, sf_dir, "documents")),
-        source_paths=table_path(sf_dir, "documents"),
-    )
-    return bigram_logprob(None, counts_df=bc)
+    return ensure_rung(spark, _q136_rungs(spark, sf_dir), "mv")
 
 
 def q132_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q132 auto-routed (r15): the shared materialized token-count
     table (re-aggregate, no re-tokenize) if fingerprint-fresh, else
     raw.  Read-only resolution, q132's oracle, rung logged."""
-    from tsdb_parquet_spark.llm.text import lexical_stats
-    from tsdb_parquet_spark.sources import peek_table, route_at_rest
-    from tsdb_parquet_spark.tables import table_path
-
-    tag = _sf_tag(sf_dir)
-
-    def _mv():
-        counts = peek_table(
-            spark, f"doctok_{tag}",
-            source_paths=table_path(sf_dir, "documents"),
-        )
-        if counts is None:
-            return None
-        return lexical_stats(None, counts_df=counts).orderBy("source")
-
-    return route_at_rest(
-        "q132_auto",
-        [
-            ("mv", _mv),
-            ("raw", lambda: q132_lexical_stats(spark, sf_dir)),
-        ],
-    )
+    return route_at_rest(spark, "q132_auto", _q132_rungs(spark, sf_dir))
 
 
 def q136_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4078,28 +3896,7 @@ def q136_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (the order-preserving twin — unigram counts cannot
     reconstruct adjacency) if fingerprint-fresh, else raw.  Read-only
     resolution, q136's oracle, rung logged."""
-    from tsdb_parquet_spark.llm.text import bigram_logprob
-    from tsdb_parquet_spark.sources import peek_table, route_at_rest
-    from tsdb_parquet_spark.tables import table_path
-
-    tag = _sf_tag(sf_dir)
-
-    def _mv():
-        bc = peek_table(
-            spark, f"docbg_{tag}",
-            source_paths=table_path(sf_dir, "documents"),
-        )
-        if bc is None:
-            return None
-        return bigram_logprob(None, counts_df=bc)
-
-    return route_at_rest(
-        "q136_auto",
-        [
-            ("mv", _mv),
-            ("raw", lambda: q136_bigram_logprob(spark, sf_dir)),
-        ],
-    )
+    return route_at_rest(spark, "q136_auto", _q136_rungs(spark, sf_dir))
 
 
 def q104_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4108,64 +3905,14 @@ def q104_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     fresh, else the shared token-count mv (re-aggregate, no
     re-tokenize), else raw.  Read-only resolution, q104's oracle, rung
     logged — see q09_auto for the routing contract."""
-    from tsdb_parquet_spark.sources import peek_table, route_at_rest
-    from tsdb_parquet_spark.tables import table_path
-
-    tag = _sf_tag(sf_dir)
-    docs_path = table_path(sf_dir, "documents")
-
-    def _sv():
-        sv = peek_table(spark, f"docsv104_{tag}", source_paths=docs_path)
-        return None if sv is None else sv
-
-    def _mv():
-        counts = peek_table(spark, f"doctok_{tag}", source_paths=docs_path)
-        if counts is None:
-            return None
-        return llm.unigram_logprob(None, vocab_size=200, counts_df=counts)
-
-    return route_at_rest(
-        "q104_auto",
-        [
-            ("sv", _sv),
-            ("mv", _mv),
-            ("raw", lambda: q104_unigram_logprob(spark, sf_dir)),
-        ],
-    )
+    return route_at_rest(spark, "q104_auto", _q104_rungs(spark, sf_dir))
 
 
 def q129_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q129 auto-routed (r14): the materialized (source, term, tf)
     count table if fingerprint-fresh, else raw.  Read-only resolution,
     q129's oracle, rung logged — see q09_auto."""
-    from tsdb_parquet_spark.llm.text import tfidf_top_terms
-    from tsdb_parquet_spark.sources import peek_table, route_at_rest
-    from tsdb_parquet_spark.tables import table_path
-
-    tag = _sf_tag(sf_dir)
-
-    def _mv():
-        tf = peek_table(
-            spark, f"q129tc_{tag}",
-            source_paths=table_path(sf_dir, "documents"),
-        )
-        if tf is None:
-            return None
-        n_groups = (
-            _t(spark, sf_dir, "documents").select("source").distinct().count()
-        )
-        out = tfidf_top_terms(None, k=10, tf_df=tf, n_groups=n_groups)
-        return out.withColumn("rank", F.col("rank").cast("bigint")).orderBy(
-            "source", "rank"
-        )
-
-    return route_at_rest(
-        "q129_auto",
-        [
-            ("mv", _mv),
-            ("raw", lambda: q129_tfidf_topterms(spark, sf_dir)),
-        ],
-    )
+    return route_at_rest(spark, "q129_auto", _q129_rungs(spark, sf_dir))
 
 
 def q152_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4173,33 +3920,7 @@ def q152_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     over one at-rest scan — the raw path's two tokenize passes never
     run) if fingerprint-fresh, else raw.  Read-only resolution, q152's
     oracle, rung logged — see q09_auto."""
-    from tsdb_parquet_spark.llm.corpus import dsir_select
-    from tsdb_parquet_spark.sources import peek_table, route_at_rest
-    from tsdb_parquet_spark.tables import table_path
-
-    tag = _sf_tag(sf_dir)
-
-    def _mv():
-        counts = peek_table(
-            spark, f"doctok_{tag}",
-            source_paths=table_path(sf_dir, "documents"),
-        )
-        if counts is None:
-            return None
-        out = dsir_select(
-            None, None, k=25, n_buckets=1024,
-            raw_counts=counts.filter(F.col("source") != "src0"),
-            target_counts=counts.filter(F.col("source") == "src0"),
-        )
-        return out.orderBy(F.desc("lr_units"), "doc_id")
-
-    return route_at_rest(
-        "q152_auto",
-        [
-            ("mv", _mv),
-            ("raw", lambda: q152_dsir_select(spark, sf_dir)),
-        ],
-    )
+    return route_at_rest(spark, "q152_auto", _q152_rungs(spark, sf_dir))
 
 
 def q137_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4382,6 +4103,21 @@ def q145_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lineitem_by_orderkey(spark: SparkSession, sf_dir: str) -> Layout:
+    """The orderkey-bucketed lineitem slice (part/supplier keys + money
+    columns) — ONE layout serving q159_bucketed and q145_bucketed; its
+    column set differs from q09's bucketed slice, so it is q159-tagged."""
+    return Layout(
+        f"q159b_lineitem_{_sf_tag(sf_dir)}",
+        lambda: _t(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_partkey", "l_suppkey",
+            "l_extendedprice", "l_discount",
+        ),
+        table_path(sf_dir, "lineitem"),
+        bucket_col="l_orderkey", num_buckets=_BUCKETS, sort_col="l_orderkey",
+    )
+
+
 def q145_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q145 over the SAME orderkey-bucketed lineitem table q159_bucketed
     materializes (r12): the at-rest layout's amortization argument made
@@ -4392,22 +4128,7 @@ def q145_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     rest.  The full-lineitem exchange — the dominant raw-plan cost at
     sf100 — vanishes; only the year/region-reduced ocust side exchanges
     to the bucket partitioning.  Identical result + oracle as q145."""
-    import re as _re
-
-    from tsdb_parquet_spark.sources import ensure_bucketed_table
-    from tsdb_parquet_spark.tables import table_path
-
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    lineitem_b = ensure_bucketed_table(
-        spark,
-        f"q159b_lineitem_{tag}",  # SHARED with q159_bucketed by design
-        lambda: _t(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey", "l_suppkey",
-            "l_extendedprice", "l_discount",
-        ),
-        "l_orderkey", num_buckets=32, sort_col="l_orderkey",
-        source_paths=table_path(sf_dir, "lineitem"),
-    )
+    lineitem_b = _lineitem_by_orderkey(spark, sf_dir).ensure(spark)
     return _q145_from(spark, sf_dir, lineitem_b, bucketed=True)
 
 
@@ -4500,15 +4221,12 @@ def q146_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the anti-join consumes the index's at-rest buckets (plan-asserted
     in tests/test_llm_ops.py); per-increment cost is O(batch), not
     O(corpus) — the property that matters when the corpus is 100 TB."""
-    import re as _re
-
     from tsdb_parquet_spark.llm.incremental import (
         ensure_fingerprint_index,
         incremental_dedup,
     )
-    from tsdb_parquet_spark.tables import table_path
 
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    tag = _sf_tag(sf_dir)
     idx = ensure_fingerprint_index(
         spark, f"q146corpus_{tag}",
         lambda: _t(spark, sf_dir, "documents"),
@@ -4549,15 +4267,12 @@ def q146c_incremental_near_dup_portable(
     at-rest band-key buckets, plan-asserted in tests/test_llm_ops.py);
     per-increment cost is O(batch x bands), not O(corpus).  The
     xxhash64 family stays the production default in the library."""
-    import re as _re
-
     from tsdb_parquet_spark.llm.incremental import (
         ensure_band_index_portable,
         incremental_near_dup_portable,
     )
-    from tsdb_parquet_spark.tables import table_path
 
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    tag = _sf_tag(sf_dir)
     idx = ensure_band_index_portable(
         spark, f"q146ccorpus_{tag}",
         lambda: _t(spark, sf_dir, "documents"),
@@ -4712,21 +4427,13 @@ def q152_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q152_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q152 served from the SAME shared materialized token-count table
-    as q104_mv/q132_mv (_doc_token_counts_mv — it carries the source
+    as q104_mv/q132_mv (_doc_tokens — it carries the source
     column, so the target/raw slices are two filters over one at-rest
     scan): bucket LMs and the per-doc fold weight each distinct token
     by its multiplicity — integer-identical to the raw path (every DSIR
     statistic is a sum over token multiplicities), SAME oracle.  The
     raw path's two tokenize passes (2.3x DuckDB at sf10) never run."""
-    from tsdb_parquet_spark.llm.corpus import dsir_select
-
-    counts = _doc_token_counts_mv(spark, sf_dir)
-    out = dsir_select(
-        None, None, k=25, n_buckets=1024,
-        raw_counts=counts.filter(F.col("source") != "src0"),
-        target_counts=counts.filter(F.col("source") == "src0"),
-    )
-    return out.orderBy(F.desc("lr_units"), "doc_id")
+    return ensure_rung(spark, _q152_rungs(spark, sf_dir), "mv")
 
 
 def q153_promql_predict_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4919,22 +4626,7 @@ def q159_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one write-time shuffle, every subsequent orderkey join free); the
     column set differs from q09's bucketed slice so the table is
     q159-tagged.  Identical result + oracle as q159."""
-    import re as _re
-
-    from tsdb_parquet_spark.sources import ensure_bucketed_table
-    from tsdb_parquet_spark.tables import table_path
-
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    lineitem_b = ensure_bucketed_table(
-        spark,
-        f"q159b_lineitem_{tag}",
-        lambda: _t(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey", "l_suppkey",
-            "l_extendedprice", "l_discount",
-        ),
-        "l_orderkey", num_buckets=32, sort_col="l_orderkey",
-        source_paths=table_path(sf_dir, "lineitem"),
-    )
+    lineitem_b = _lineitem_by_orderkey(spark, sf_dir).ensure(spark)
     return _q159_from(
         spark, sf_dir, _t(spark, sf_dir, "orders"), lineitem_b, bucketed=True
     )
@@ -5037,7 +4729,6 @@ def q160_streaming_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame
     follow the q90 recipe (FileStreamSource schedules oldest mtime
     first under maxFilesPerTrigger=1)."""
     import datetime as _dt
-    import re as _re
     import shutil
     import tempfile
 
@@ -5048,7 +4739,7 @@ def q160_streaming_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame
     from tsdb_parquet_spark.tables import load_table
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    tag = _sf_tag(sf_dir)
     split_dir = os.path.join(
         tempfile.gettempdir(), f"tsdb_spark_q160_{tag}__src"
     )
@@ -5120,20 +4811,11 @@ def q104_sv(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads back only the columns/partitions it asks for).  SAME oracle
     as q104: the at-rest table IS the raw path's output persisted
     under the source-content fingerprint (regenerated sources
-    invalidate the cache — the ensure_materialized staleness
-    contract), so the driver hash proves scan-served == recomputed."""
-    import re as _re
-
-    from tsdb_parquet_spark.sources import ensure_materialized
-    from tsdb_parquet_spark.tables import table_path
-
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    sv = ensure_materialized(
-        spark, f"docsv104_{tag}",
-        lambda: q104_unigram_logprob(spark, sf_dir),
-        source_paths=table_path(sf_dir, "documents"),
-    )
-    return sv.orderBy("doc_id")
+    invalidate the cache — the sources.Layout staleness contract), so
+    the driver hash proves scan-served == recomputed.  The pinned entry
+    keeps its display ordering over the shared sv rung (the auto route
+    skips that sort: the driver hash is row-order-insensitive)."""
+    return ensure_rung(spark, _q104_rungs(spark, sf_dir), "sv").orderBy("doc_id")
 
 
 def q161_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5454,21 +5136,14 @@ def q170_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     (verdict r13: 2.99x at sf100 — the in-process engine's best-case
     shape, a single fused scan-agg our exchange-free plan can't beat
     on one box).  The 4-row result materializes once under the
-    lineitem fingerprint (sources.ensure_materialized) and every
+    lineitem fingerprint (a sources.Layout) and every
     subsequent pricing-summary call scans 4 rows — the q09_mv ladder
     applied to the pure-aggregate shape.  Same oracle as q170."""
-    import re as _re
-
-    from tsdb_parquet_spark.sources import ensure_materialized
-    from tsdb_parquet_spark.tables import table_path
-
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    return ensure_materialized(
-        spark,
-        f"q170mv_{tag}",
+    return Layout(
+        f"q170mv_{_sf_tag(sf_dir)}",
         lambda: _q170_from(_t(spark, sf_dir, "lineitem")),
-        source_paths=table_path(sf_dir, "lineitem"),
-    )
+        table_path(sf_dir, "lineitem"),
+    ).ensure(spark)
 
 
 def q171_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5557,7 +5232,7 @@ def q171_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # twice, which is the term that grows with corpus bytes, so the
     # single-evaluation carry-agg is the 100 TB-shaped choice.
     # r16: the benchmark-side explode spreads too (same r13 lesson)
-    _n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    _n_part = shuffle_partitions(spark)
     bench_ngrams = _exploded_ngrams(
         bench.select("text").repartition(_n_part), [], "text", 8
     ).distinct()
@@ -5622,15 +5297,12 @@ def q172_curation_with_neardup(
     arrays through the O(n·bands) exchange); the exact-Jaccard rerank
     touches candidate pairs only.  Pair semantics are identical
     (pytest: near_dup_pairs_from_band_index == minhash_lsh_portable)."""
-    import re as _re
-
     from tsdb_parquet_spark.llm.corpus import _exploded_ngrams, word_ngrams_from
     from tsdb_parquet_spark.llm.incremental import (
         ensure_band_index_portable,
         near_dup_pairs_from_band_index,
     )
     from tsdb_parquet_spark.llm.text import fingerprint_col, tokens_col
-    from tsdb_parquet_spark.tables import table_path
 
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 20 == 0)
@@ -5647,7 +5319,7 @@ def q172_curation_with_neardup(
         fp.groupBy("fingerprint").agg(keep.alias("_r"))
         .select("fingerprint", "_r.*")
     )
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    tag = _sf_tag(sf_dir)
     idx = ensure_band_index_portable(
         spark, f"q172dedup_{tag}", lambda: dedup,
         source_paths=table_path(sf_dir, "documents"),
@@ -5686,7 +5358,7 @@ def q172_curation_with_neardup(
     # broadcast hit-mark join into one combining hash aggregate.  Same
     # rows (survive iff zero distinct-8-gram benchmark hits), same oracle.
     # r16: the benchmark-side explode spreads too (same r13 lesson)
-    _n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    _n_part = shuffle_partitions(spark)
     bench_ngrams = _exploded_ngrams(
         bench.select("text").repartition(_n_part), [], "text", 8
     ).distinct()
@@ -5736,7 +5408,6 @@ def q173_manifest_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot isolation property (a version never sees a later commit).
     Batch mode keeps the gate deterministic and cheap; q121 gates the
     same sink under real streaming replay."""
-    import re as _re
     import shutil
     import tempfile
 
@@ -5745,7 +5416,7 @@ def q173_manifest_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         upsert_latest_sink_manifest,
     )
 
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
+    tag = _sf_tag(sf_dir)
     base = os.path.join(tempfile.gettempdir(), f"tsdb_spark_tt_{tag}")
     shutil.rmtree(base, ignore_errors=True)
     events = _t(spark, sf_dir, "events")

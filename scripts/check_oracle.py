@@ -10,13 +10,14 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 from datetime import date, datetime
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tsdb_parquet_spark.session import get_spark  # noqa: E402
 from tsdb_parquet_spark.tables import TABLE_NAMES, table_path  # noqa: E402

@@ -5,9 +5,11 @@ code. Usage: python scripts/gen_query_catalog.py"""
 from __future__ import annotations
 
 import inspect
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as m  # noqa: E402
 
@@ -72,7 +74,7 @@ def coverage_ledger(queries: dict) -> list[str]:
     import json
 
     rounds: dict[str, dict] = {}
-    for p in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for p in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         rnd = p.rsplit("_r", 1)[1].split(".")[0].lstrip("0") or "0"
         rounds[f"r{rnd}"] = json.load(open(p))
     lines = [
@@ -131,7 +133,7 @@ def main() -> None:
         desc = (first_comment_or_doc(fn) or FALLBACK.get(name, "")).replace("|", "\\|")
         lines.append(f"| {name} | {has} | {desc} |")
     lines += coverage_ledger(queries)
-    open("/root/repo/QUERIES.md", "w").write("\n".join(lines) + "\n")
+    open(os.path.join(ROOT, "QUERIES.md"), "w").write("\n".join(lines) + "\n")
     print(f"wrote QUERIES.md: {len(queries)} queries")
 
 

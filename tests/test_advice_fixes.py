@@ -108,25 +108,24 @@ def test_bucketed_table_cache_invalidates_on_source_change(spark, tmp_path):
 
     src = str(tmp_path / "t.parquet")
 
-    from tsdb_parquet_spark.sources import ensure_bucketed_table
+    from tsdb_parquet_spark.sources import Layout
 
     spark.range(5).withColumnRenamed("id", "k").write.mode("overwrite").parquet(src)
 
     def build():
         return spark.read.parquet(src)
 
-    t1 = ensure_bucketed_table(
-        spark, "advfix_src", build, "k", num_buckets=2, source_paths=src
+    layout = Layout(
+        "advfix_src", build, source_paths=src, bucket_col="k", num_buckets=2
     )
+    t1 = layout.ensure(spark)
     assert t1.count() == 5
     # regenerate with different contents; ensure mtime_ns moves even on
     # coarse-granularity filesystems
     time.sleep(0.05)
     spark.range(9).withColumnRenamed("id", "k").write.mode("overwrite").parquet(src)
     os.utime(src)
-    t2 = ensure_bucketed_table(
-        spark, "advfix_src", build, "k", num_buckets=2, source_paths=src
-    )
+    t2 = layout.ensure(spark)
     assert t2.count() == 9  # fresh table, not the cached 5-row one
     # the stale sibling was dropped from the catalog
     names = [t.name for t in spark.catalog.listTables() if t.name.startswith("advfix_src_")]
@@ -170,6 +169,29 @@ def test_pin_partitioning_non_numeric_conf_falls_back(spark, monkeypatch):
     monkeypatch.setattr(spark.conf, "get", fake_get)
     out = pin_partitioning(df, ["k"])
     assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def test_q171_non_numeric_shuffle_conf_falls_back(spark, monkeypatch):
+    # the curation pipeline spreads its benchmark explode by the
+    # shuffle-partition count; a conf that reads back "auto" must fall
+    # back to defaultParallelism (same read-path simulation as above),
+    # not raise, and must not change the answer
+    import __spark_entry__ as entry
+
+    sf = "/root/testdata/sf0.001"
+    want = entry.q171_curation_pipeline(spark, sf).collect()
+    real_get = spark.conf.get
+
+    _unset = object()
+
+    def fake_get(key, default=_unset):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(key) if default is _unset else real_get(key, default)
+
+    monkeypatch.setattr(spark.conf, "get", fake_get)
+    got = entry.q171_curation_pipeline(spark, sf).collect()
+    assert got == want and len(got) > 0
 
 
 def test_bpe_tokens_vertical_tab_matches_oracle_semantics(spark):

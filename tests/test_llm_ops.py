@@ -1011,7 +1011,11 @@ def test_ivf_at_rest_layout_prunes_partitions(spark, tmp_path):
 
 
 def test_bm25_indexed_matches_inline_and_prunes_buckets(spark, tmp_path):
-    from tsdb_parquet_spark.llm.ranking import bm25_rank, bm25_rank_indexed
+    from tsdb_parquet_spark.llm.ranking import (
+        bm25_index_layouts,
+        bm25_rank,
+        bm25_rank_indexed,
+    )
 
     rows = [(i, f"alpha beta gamma term{i % 7} alpha") for i in range(40)]
     src = str(tmp_path / "docs.parquet")
@@ -1020,8 +1024,9 @@ def test_bm25_indexed_matches_inline_and_prunes_buckets(spark, tmp_path):
     terms = ["alpha", "term3"]
 
     inline = bm25_rank(build(), terms, top_k=10).collect()
-    idx = bm25_rank_indexed(spark, "bm25_idx_test", build, terms, top_k=10,
-                            source_paths=src)
+    post, stats = bm25_index_layouts("bm25_idx_test", build, source_paths=src)
+    idx = bm25_rank_indexed(post.ensure(spark), stats.ensure(spark), terms,
+                            top_k=10)
     plan = idx._jdf.queryExecution().executedPlan().toString()
     # the term filter prunes buckets at planning time — the scan opens
     # only the buckets holding the query terms, not all 16

@@ -634,53 +634,43 @@ def test_q155_nullsafe_matching_plans_hash_join(entry, spark):
 
 
 # ---------------------------------------------------------------------------
-# r14: layout auto-routing (sources.route_at_rest / peek_*)
+# r14: layout auto-routing (sources.route_at_rest / Layout.peek)
 # ---------------------------------------------------------------------------
 
 
 def test_route_at_rest_resolution_order(spark, tmp_path):
     """route_at_rest picks the first available rung and logs the
-    choice; peek_table never builds (a miss is a stat call)."""
+    choice; Layout.peek never builds (a miss is a stat call)."""
     import os
 
     from pyspark.sql import functions as F
 
     from tsdb_parquet_spark.sources import (
         ROUTE_LOG,
-        ensure_materialized,
-        peek_table,
+        Layout,
         route_at_rest,
     )
 
     src = str(tmp_path / "src.parquet")
     spark.range(10).withColumn("v", F.col("id") * 2).write.parquet(src)
-
-    # miss: nothing materialized under this name
-    assert peek_table(spark, "routetest_mv", source_paths=src) is None
-    out = route_at_rest(
-        "routetest",
-        [
-            ("mv", lambda: peek_table(spark, "routetest_mv",
-                                      source_paths=src)),
-            ("raw", lambda: spark.read.parquet(src)),
-        ],
-    )
-    assert ROUTE_LOG["routetest"] == "raw" and out.count() == 10
-
-    # build the mv rung; the SAME route now resolves to it read-only
-    ensure_materialized(
-        spark, "routetest_mv",
+    mv = Layout(
+        "routetest_mv",
         lambda: spark.read.parquet(src).groupBy().count(),
         source_paths=src,
     )
-    out2 = route_at_rest(
-        "routetest",
-        [
-            ("mv", lambda: peek_table(spark, "routetest_mv",
-                                      source_paths=src)),
-            ("raw", lambda: spark.read.parquet(src)),
-        ],
-    )
+    rungs = [
+        ("mv", [mv], lambda t: t),
+        ("raw", [], lambda: spark.read.parquet(src)),
+    ]
+
+    # miss: nothing materialized under this name
+    assert mv.peek(spark) is None
+    out = route_at_rest(spark, "routetest", rungs)
+    assert ROUTE_LOG["routetest"] == "raw" and out.count() == 10
+
+    # build the mv rung; the SAME route now resolves to it read-only
+    mv.ensure(spark)
+    out2 = route_at_rest(spark, "routetest", rungs)
     assert ROUTE_LOG["routetest"] == "mv" and out2.count() == 1
 
     # fingerprint staleness: rewriting the source invalidates the peek
@@ -688,11 +678,11 @@ def test_route_at_rest_resolution_order(spark, tmp_path):
     part = [p for p in __import__("pathlib").Path(src).rglob("part-*")
             if p.is_file() and not p.name.startswith((".", "_"))][0]
     os.utime(part)
-    assert peek_table(spark, "routetest_mv", source_paths=src) is None
+    assert mv.peek(spark) is None
 
 
 def test_peek_bucketed_reregisters_from_disk(spark, tmp_path):
-    """peek_bucketed_table re-registers committed bucket files through
+    """Layout.peek re-registers committed bucket files through
     DDL (a plain parquet read would lose co-location) and the result
     keeps the bucket metadata.  Simulates a session restart (catalog
     forgets, files persist) by copying the committed files to a fresh
@@ -704,19 +694,18 @@ def test_peek_bucketed_reregisters_from_disk(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from tsdb_parquet_spark.sources import (
+        Layout,
         _warehouse_dir,
-        ensure_bucketed_table,
-        peek_bucketed_table,
         source_fingerprint,
     )
 
     src = str(tmp_path / "bsrc.parquet")
     spark.range(100).withColumn("k", F.col("id") % 7).write.parquet(src)
-    ensure_bucketed_table(
-        spark, "routetest_bkt",
+    Layout(
+        "routetest_bkt",
         lambda: spark.read.parquet(src),
-        "k", num_buckets=4, sort_col="k", source_paths=src,
-    )
+        src, bucket_col="k", num_buckets=4, sort_col="k",
+    ).ensure(spark)
     fp = source_fingerprint(src)
     wh = _warehouse_dir(spark)
     shutil.copytree(
@@ -724,10 +713,10 @@ def test_peek_bucketed_reregisters_from_disk(spark, tmp_path):
         os.path.join(wh, f"routetest2_bkt_b4_{fp}"),
     )
     # catalog miss + committed files on disk -> DDL re-registration
-    got = peek_bucketed_table(
-        spark, "routetest2_bkt", "k", num_buckets=4, sort_col="k",
-        source_paths=src,
-    )
+    got = Layout(
+        "routetest2_bkt", source_paths=src,
+        bucket_col="k", num_buckets=4, sort_col="k",
+    ).peek(spark)
     assert got is not None and got.count() == 100
     desc = spark.sql(
         f"DESCRIBE FORMATTED `routetest2_bkt_b4_{fp}`"
@@ -740,3 +729,63 @@ def test_peek_bucketed_reregisters_from_disk(spark, tmp_path):
         got.groupBy("k").count()._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange hashpartitioning(k" not in plan
+
+
+# each auto-routed family's rungs from the lowest to the highest, with
+# the pinned entry that builds each one
+_LADDERS = {
+    "q06": [("series_dim", "q06_series_dim"), ("mv", "q06_mv")],
+    "q09": [("bucketed", "q09_bucketed"), ("mv", "q09_mv")],
+    "q14": [("bucketed", "q14_bucketed")],
+    "q16": [("bucketed", "q16_bucketed")],
+    "q28": [("bucketed", "q28_bucketed")],
+    "q91": [("indexed", "q91_indexed")],
+    "q104": [("mv", "q104_mv"), ("sv", "q104_sv")],
+    "q129": [("mv", "q129_mv")],
+    "q132": [("mv", "q132_mv")],
+    "q136": [("mv", "q136_mv")],
+    "q152": [("mv", "q152_mv")],
+}
+
+
+def test_auto_families_route_to_each_built_rung(entry, spark, tmp_path):
+    """The route contract of all eleven ``_auto`` families: raw with
+    nothing built, then — right after each rung's pinned entry builds
+    it, lowest rung first — that rung, with the raw entry's rows.  A
+    pinned layout that drifted from what its ``_auto`` entry probes
+    would route to a lower rung here."""
+    import os
+    import shutil
+    import uuid
+
+    from tsdb_parquet_spark.sources import ROUTE_LOG, _warehouse_dir
+
+    # a fresh copy: fresh source fingerprints, and an sf tag no earlier
+    # run has built under (the q06 ladder is fingerprinted on the
+    # engine-owned tsdb fixture, not the sf dir)
+    tag = f"routesf{uuid.uuid4().hex[:8]}"
+    sf = str(tmp_path / tag)
+    shutil.copytree(SF, sf)
+    queries = entry.queries()
+
+    def rows(name):
+        return sorted(repr(r) for r in queries[name](spark, sf).collect())
+
+    try:
+        raw = {}
+        for fam in _LADDERS:
+            raw[fam] = rows(f"{fam}_auto")
+            assert ROUTE_LOG[f"{fam}_auto"] == "raw", fam
+        for fam, ladder in _LADDERS.items():
+            for rung, pinned in ladder:
+                assert rows(pinned) == raw[fam], pinned
+                assert rows(f"{fam}_auto") == raw[fam], (fam, rung)
+                assert ROUTE_LOG[f"{fam}_auto"] == rung, (fam, rung)
+    finally:
+        for t in spark.catalog.listTables():
+            if tag in t.name:
+                spark.sql(f"DROP TABLE IF EXISTS `{t.name}`")
+        wh = _warehouse_dir(spark)
+        for d in os.listdir(wh):
+            if tag in d:
+                shutil.rmtree(os.path.join(wh, d), ignore_errors=True)

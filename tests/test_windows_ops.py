@@ -143,16 +143,17 @@ def test_series_dim_layout_matches_raw_regroup(spark):
     # Exchange between the facts scan and the final series_id aggregate
     from tsdb_parquet_spark.tables import TSDB_PATH
     from tsdb_parquet_spark.timeseries import (
-        ensure_series_dim_layout,
         regroup_series_stats_dim,
+        series_dim_layouts,
     )
 
     labels = ["label_name", "label_instance", "label_job", "label_quantile"]
-    facts, dim = ensure_series_dim_layout(
+    layouts = series_dim_layouts(
         spark, "q06d_tsdb_sf0_001",
         lambda: entry._t(spark, sf, "tsdb").select(*labels, "time", "value"),
         labels, source_paths=TSDB_PATH,
     )
+    facts, dim = [layout.ensure(spark) for layout in layouts]
     agg_plan = facts.groupBy("series_id").count()._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in agg_plan
 

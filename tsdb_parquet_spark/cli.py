@@ -371,14 +371,18 @@ def main(argv: list[str] | None = None) -> None:
     if args.cmd == "bm25":
         import re
 
-        from .llm.ranking import bm25_rank_indexed
+        from .llm.ranking import bm25_index_layouts, bm25_rank_indexed
 
         name = args.name or "bm25_idx_cli_" + re.sub(
             r"[^0-9A-Za-z]+", "_", args.docs.rstrip("/").rsplit("/", 1)[-1]
         )
+        post, stats = bm25_index_layouts(
+            name, lambda: spark.read.parquet(args.docs),
+            source_paths=args.docs,
+        )
         out = bm25_rank_indexed(
-            spark, name, lambda: spark.read.parquet(args.docs),
-            args.terms, top_k=args.topk, source_paths=args.docs,
+            post.ensure(spark), stats.ensure(spark), args.terms,
+            top_k=args.topk,
         )
         out.show(args.topk, truncate=False)
         return

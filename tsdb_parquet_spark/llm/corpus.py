@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.partitioning import shuffle_partitions
 from .text import tokens_col
 
 
@@ -217,11 +218,7 @@ def decontaminate(
     # sf10 (500 k docs, one parquet row group).  The docs side keys on
     # id (consumed by the per-doc hit aggregate below); the benchmark
     # side is round-robin (its n-grams feed an _ng-keyed distinct).
-    try:
-        _n_part = int(docs.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        _n_part = docs.sparkSession.sparkContext.defaultParallelism
+    _n_part = shuffle_partitions(docs.sparkSession)
     bench_ngrams = _exploded_ngrams(
         benchmark.select(text_col).repartition(_n_part), [], text_col, n
     ).distinct()
@@ -541,11 +538,7 @@ def bloom_decontaminate(
     # :func:`decontaminate`): the corpus-side n-gram explode + 7-hash
     # bitmap probe otherwise runs at row-group scan parallelism (ONE
     # task on compact corpora)
-    try:
-        _n_part = int(docs.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        _n_part = docs.sparkSession.sparkContext.defaultParallelism
+    _n_part = shuffle_partitions(docs.sparkSession)
     bench_ngrams = _exploded_ngrams(
         benchmark.select(text_col).repartition(_n_part), [], text_col, n
     ).distinct()

@@ -32,6 +32,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.partitioning import shuffle_partitions
+
 # Mersenne prime 2^31-1: universal-hash modulus.  Products a*h stay well
 # below 2^63, so the arithmetic is safe under ANSI overflow checking.
 _MERSENNE = (1 << 31) - 1
@@ -317,10 +319,7 @@ def _pair_jaccard_int64_grouped(
     ``cand`` is evaluated twice (group keys + doc demand) — measured
     a wash to persist, and both evaluations are narrow."""
     spark = cand.sparkSession
-    try:
-        nsp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        nsp = spark.sparkContext.defaultParallelism
+    nsp = shuffle_partitions(spark)
     # 4x the shuffle partition count: enough distinct keys to spread
     # over the reducers (guide §2.5), few enough that groups stay
     # vectorization-sized; the multiplier measured flat 1x-8x at sf1

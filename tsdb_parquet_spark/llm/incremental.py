@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources import Layout, _drop_stale_siblings
+
 
 def fingerprint_index_name(name: str) -> str:
     return f"{name}_fpidx"
@@ -39,24 +41,19 @@ def ensure_fingerprint_index(
 ) -> DataFrame:
     """Idempotent at-rest fingerprint index of a corpus: one
     (fingerprint, id) row per document, hash-bucketed AND sorted on the
-    fingerprint (``sources.ensure_bucketed_table`` — fingerprint-named
+    fingerprint (:class:`sources.Layout` — fingerprint-named
     staleness, catalog/DDL/write resolution).  The ONE write-time
     shuffle amortizes over every subsequent increment."""
-    from ..sources import ensure_bucketed_table
     from .text import doc_fingerprint
 
-    def _build():
-        return doc_fingerprint(build_docs(), id_col=id_col, text_col=text_col)
-
-    return ensure_bucketed_table(
-        spark,
+    return Layout(
         fingerprint_index_name(name),
-        _build,
+        lambda: doc_fingerprint(build_docs(), id_col=id_col, text_col=text_col),
+        source_paths,
         bucket_col="fingerprint",
         num_buckets=num_buckets,
         sort_col="fingerprint",
-        source_paths=source_paths,
-    )
+    ).ensure(spark)
 
 
 def incremental_dedup(
@@ -166,7 +163,7 @@ def ensure_band_index(
     rescanning the corpus, but an LSH check still had to re-band 100 TB
     per increment).  One ``(id, band_key)`` row per (document, band) —
     ``bands`` rows per doc — hash-bucketed AND sorted on the band key
-    (``sources.ensure_bucketed_table``: fingerprint-named staleness,
+    (:class:`sources.Layout`: fingerprint-named staleness,
     catalog/DDL/write resolution).  Signature + banding are one map
     stage (dedup.minhash_signatures); the ONE write-time shuffle
     amortizes over every increment.
@@ -178,7 +175,6 @@ def ensure_band_index(
     old tables lingered in the warehouse.  Building now VACUUMS the
     legacy-named family first (same catalog-and-dir sweep as the
     fingerprint staleness cleanup)."""
-    from ..sources import _drop_stale_siblings, ensure_bucketed_table
     from .dedup import minhash_signatures
 
     # drop pre-r13 unsuffixed '{name}_bandidx_*' tables/dirs: the param
@@ -200,15 +196,14 @@ def ensure_band_index(
             ).alias("band_key"),
         )
 
-    return ensure_bucketed_table(
-        spark,
+    return Layout(
         band_index_name(name, num_hashes, bands, shingle_n, seed),
         _build,
+        source_paths,
         bucket_col="band_key",
         num_buckets=num_buckets,
         sort_col="band_key",
-        source_paths=source_paths,
-    )
+    ).ensure(spark)
 
 
 def incremental_near_dup_candidates(
@@ -304,7 +299,6 @@ def ensure_band_index_portable(
     8 bands) so both portable rungs share one coefficient list.
     Vacuums pre-r13 unsuffixed legacy tables like
     :func:`ensure_band_index` (advice r13 migration)."""
-    from ..sources import _drop_stale_siblings, ensure_bucketed_table
     from .dedup import minhash_signatures_portable
 
     _drop_stale_siblings(
@@ -324,15 +318,14 @@ def ensure_band_index_portable(
             ).alias("band_key"),
         )
 
-    return ensure_bucketed_table(
-        spark,
+    return Layout(
         band_index_name(name, num_hashes, bands, shingle_n, seed),
         _build,
+        source_paths,
         bucket_col="band_key",
         num_buckets=num_buckets,
         sort_col="band_key",
-        source_paths=source_paths,
-    )
+    ).ensure(spark)
 
 
 def incremental_near_dup_portable(

@@ -13,7 +13,7 @@ the corpus.  Corpus stats (N, total token count) are a one-row
 aggregate; per-term document frequencies are a |Q|-row broadcast.  The
 final ranking is top-k (TakeOrderedAndProject), never a full sort.  For
 repeated querying at rest, materialize the (doc_id, term, tf, dl)
-postings table once via ``sources.ensure_table`` and skip the tokenize
+postings table once (:func:`bm25_index_layouts`) and skip the tokenize
 pass entirely — this function computes it inline so a single call is
 self-contained.
 """
@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..sources import Layout
 
 # Explicit whitespace class, not \s: Java's \s includes vertical tab
 # while RE2's (the DuckDB oracle's engine) does not (see
@@ -151,77 +153,55 @@ def _score_topk(
     )
 
 
-def bm25_rank_indexed(
-    spark,
+def bm25_index_layouts(
     name: str,
     build_docs,
-    query_terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
-    top_k: int = 20,
     num_buckets: int = 16,
     doc_id: str = "doc_id",
     text_col: str = "text",
     source_paths: str | list[str] | None = None,
-) -> DataFrame:
-    """:func:`bm25_rank` served from a PERSISTED inverted index — the
-    at-rest rung of the lexical-ranking ladder, exactly q09_mv's pattern
-    applied to retrieval: tokenize the corpus ONCE into a
+) -> tuple[Layout, Layout]:
+    """The PERSISTED inverted index behind :func:`bm25_rank_indexed` —
+    the at-rest rung of the lexical-ranking ladder, exactly q09_mv's
+    pattern applied to retrieval: the corpus tokenized ONCE into a
     (doc_id, dl, term, tf) postings table bucketed+sorted by ``term``
-    (``sources.ensure_bucketed_table`` — fingerprint staleness, cheap
-    no-op when current), with the one-row corpus stats stored alongside;
-    every query then reads only the buckets holding its terms (bucket
-    pruning: ``SelectedBucketsCount`` in the scan, plan-asserted in
-    tests) — at 100 TB the per-query cost is O(postings of |Q| terms),
-    independent of corpus size, and no tokenization happens at query
-    time.  Identical arithmetic to :func:`bm25_rank` (same oracle)."""
-    if not query_terms:
-        raise ValueError("query_terms must be non-empty")
-    from ..sources import ensure_bucketed_table, ensure_table
-
-    post = ensure_bucketed_table(
-        spark, name,
+    (``name``), with the one-row corpus stats stored alongside
+    (``{name}_stats``), both fingerprint-named (:class:`sources.Layout`
+    — cheap no-op when current).  Returns the ``(postings, stats)``
+    layouts; ``ensure`` builds them, ``peek`` probes them read-only."""
+    post = Layout(
+        name,
         lambda: _postings(_tokenized(build_docs(), doc_id, text_col), doc_id),
+        source_paths,
         bucket_col="term", num_buckets=num_buckets, sort_col="term",
-        source_paths=source_paths,
     )
-    stats = ensure_table(
-        spark, f"{name}_stats",
+    stats = Layout(
+        f"{name}_stats",
         lambda: _corpus_stats(_tokenized(build_docs(), doc_id, text_col)),
-        source_paths=source_paths,
+        source_paths,
     )
-    tf = post.filter(F.col("term").isin(list(query_terms)))
-    return _score_topk(tf, stats, query_terms, k1, b, top_k, doc_id)
+    return post, stats
 
 
-def bm25_rank_indexed_peek(
-    spark,
-    name: str,
+def bm25_rank_indexed(
+    postings: DataFrame,
+    stats: DataFrame,
     query_terms: list[str],
     k1: float = 1.2,
     b: float = 0.75,
     top_k: int = 20,
-    num_buckets: int = 16,
     doc_id: str = "doc_id",
-    source_paths: str | list[str] | None = None,
-) -> DataFrame | None:
-    """READ-ONLY resolution of the :func:`bm25_rank_indexed` layout —
-    the probe half for layout auto-routing (sources.route_at_rest):
-    serve the query from the committed fingerprint-fresh postings +
-    stats tables if BOTH exist, else return ``None`` without building
-    anything.  Identical scoring tail (same oracle as bm25_rank)."""
+) -> DataFrame:
+    """:func:`bm25_rank` served from the tables of
+    :func:`bm25_index_layouts`: every query reads only the postings
+    buckets holding its terms (bucket pruning: ``SelectedBucketsCount``
+    in the scan, plan-asserted in tests) — at 100 TB the per-query cost
+    is O(postings of |Q| terms), independent of corpus size, and no
+    tokenization happens at query time.  Identical arithmetic to
+    :func:`bm25_rank` (same oracle)."""
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
-    from ..sources import peek_bucketed_table, peek_table
-
-    post = peek_bucketed_table(
-        spark, name, bucket_col="term", num_buckets=num_buckets,
-        sort_col="term", source_paths=source_paths,
-    )
-    stats = peek_table(spark, f"{name}_stats", source_paths=source_paths)
-    if post is None or stats is None:
-        return None
-    tf = post.filter(F.col("term").isin(list(query_terms)))
+    tf = postings.filter(F.col("term").isin(list(query_terms)))
     return _score_topk(tf, stats, query_terms, k1, b, top_k, doc_id)
 
 

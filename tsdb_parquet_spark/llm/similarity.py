@@ -34,6 +34,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources import Layout
+
 
 def _arrow_type(dt):
     """Arrow type of a Spark atomic type (id columns) — pyspark's own
@@ -487,6 +489,22 @@ def ivf_topk(
     )
 
 
+def _ivf_layouts(
+    name: str, source_paths, assigned=None, train=None
+) -> tuple[Layout, Layout]:
+    """The IVF cell layout (``name``, hive-partitioned by ``cell``) and
+    its ``{name}_centroids`` sidecar, both fingerprint-named."""
+    return (
+        Layout(name, assigned, source_paths, partition_by="cell"),
+        Layout(f"{name}_centroids", train, source_paths),
+    )
+
+
+def _centroid_array(centroids: DataFrame) -> np.ndarray:
+    rows = centroids.orderBy("cell").collect()
+    return np.array([r["centroid"] for r in rows], dtype=np.float64)
+
+
 def ensure_ivf_layout(
     spark,
     name: str,
@@ -500,70 +518,38 @@ def ensure_ivf_layout(
 ) -> DataFrame:
     """The PERSISTED form of :func:`ivf_topk`'s cell layout: assign every
     vector to its nearest centroid once, write hive-partitioned by
-    ``cell`` (``sources.ensure_table(partition_by=["cell"])`` — same
+    ``cell`` (:class:`sources.Layout` with ``partition_by="cell"`` —
     fingerprint staleness, catalog/DDL/write resolution), and store the
-    trained centroids alongside as a ``{name}_centroids`` table so a
-    cold session probes the SAME cells (retraining — distributed
-    k-means whose k-means|| init depends on data partitioning — could
-    silently move cell boundaries between sessions).
+    trained centroids alongside as a ``{name}_centroids`` layout so a
+    cold session probes the SAME cells: the sidecar resolves first and
+    re-registers from the warehouse when the catalog has forgotten it —
+    retraining (distributed k-means whose k-means|| init depends on
+    data partitioning) could silently move the cell boundaries the
+    persisted layout was assigned under.
 
     At 100 TB this is the difference between ANN as a full scan with a
     cheap filter and ANN as planning-time partition pruning: a probe of
     ``nprobe`` of ``num_centroids`` cells reads ~nprobe/num_centroids of
     the bytes, verified by ``PartitionFilters`` in the scan node
     (tests/test_llm_ops.py plan assertion)."""
-    from ..sources import _drop_stale_siblings, ensure_table, source_fingerprint
 
-    import os
-    import shutil
-
-    fp = source_fingerprint(source_paths) if source_paths is not None else None
-    cname = f"{name}_centroids" if fp is None else f"{name}_centroids_{fp}"
-    if fp is not None:
-        _drop_stale_siblings(spark, f"{name}_centroids", keep=cname)
-    # Same catalog -> committed-files-on-disk -> write resolution as
-    # sources.ensure_table: the in-memory catalog forgets tables across
-    # sessions while the warehouse dir persists, so a cold session's
-    # saveAsTable would die with LOCATION_ALREADY_EXISTS — and
-    # retraining here would be worse than the crash: a new driver
-    # sample moves the cell boundaries the persisted layout was
-    # assigned under.
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    for pre in ("file://", "file:"):
-        if wh.startswith(pre):
-            wh = wh[len(pre):]
-            break
-    cloc = os.path.join(wh, cname)
-    if spark.catalog.tableExists(cname):
-        rows = spark.table(cname).orderBy("cell").collect()
-        centroids = np.array([r["centroid"] for r in rows], dtype=np.float64)
-    elif os.path.exists(os.path.join(cloc, "_SUCCESS")):
-        spark.sql(
-            f"CREATE TABLE `{cname}` (cell int, centroid array<double>) "
-            f"USING parquet LOCATION '{cloc}'"
-        )
-        rows = spark.table(cname).orderBy("cell").collect()
-        centroids = np.array([r["centroid"] for r in rows], dtype=np.float64)
-    else:
-        if os.path.exists(cloc):
-            shutil.rmtree(cloc)
+    def _train():
         centroids = _train_centroids(
             build_df(), dim, num_centroids, emb_col, seed, sample_fraction
         )
-        spark.createDataFrame(
+        return spark.createDataFrame(
             [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
             "cell int, centroid array<double>",
-        ).write.mode("overwrite").format("parquet").saveAsTable(cname)
+        )
 
     def _assigned():
         return build_df().withColumn(
             "cell", _cell_assignment(centroids, emb_col)
         )
 
-    return ensure_table(
-        spark, name, _assigned,
-        source_paths=source_paths, partition_by="cell",
-    )
+    cells, cents = _ivf_layouts(name, source_paths, _assigned, _train)
+    centroids = _centroid_array(cents.ensure(spark))
+    return cells.ensure(spark)
 
 
 def ivf_topk_at_rest(
@@ -583,20 +569,15 @@ def ivf_topk_at_rest(
     read ONLY the ``nprobe`` nearest cell partitions (planning-time
     pruning — the scan never opens the other directories), exact cosine
     rerank within them, TakeOrderedAndProject top-k."""
-    from ..sources import source_fingerprint
-
-    fp = source_fingerprint(source_paths) if source_paths is not None else None
-    tname = name if fp is None else f"{name}_{fp}"
-    cname = f"{name}_centroids" if fp is None else f"{name}_centroids_{fp}"
-    rows = spark.table(cname).orderBy("cell").collect()
-    centroids = np.array([r["centroid"] for r in rows], dtype=np.float64)
+    cells, cents = _ivf_layouts(name, source_paths)
+    centroids = _centroid_array(spark.table(cents.table_name()))
     qv = np.asarray(query_vec, dtype=np.float64)
     order = np.argsort([-float(np.dot(c, qv)) for c in centroids])
     probe_cells = [int(c) for c in order[:nprobe]]
 
     sim = F.round(cosine_cols(F.col(emb_col), vector_lit(query_vec)), round_dp)
     return (
-        spark.table(tname)
+        spark.table(cells.table_name())
         .filter(F.col("cell").isin(probe_cells))
         .select(F.col(id_col), sim.alias(sim_alias))
         .orderBy(F.desc(sim_alias), id_col)

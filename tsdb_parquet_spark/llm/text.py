@@ -14,6 +14,8 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.partitioning import shuffle_partitions
+
 # Tiny per-language stopword seeds for the n-gram/stopword heuristic.
 # Deliberately small and deterministic; a production lang-id would load a
 # fastText-style model via mapInPandas (see multimodal.py for the pattern).
@@ -86,7 +88,7 @@ def doc_token_counts(
     This is the at-rest entry point for the token family (r10 verdict
     #1): the regex split + explode floor shared by q104/q114/q129/q132
     (measured sf10 decomposition SCALE.md §5l) is paid ONCE when the
-    table is materialized (sources.ensure_materialized), after which
+    table is materialized (a sources.Layout), after which
     :func:`unigram_logprob` (``counts_df=``), :func:`lexical_stats`
     (``counts_df=``), and :func:`tfidf_top_terms` (``tf_df=`` after a
     per-group re-aggregate) run on pre-counted rows — identical results
@@ -817,11 +819,7 @@ def lexical_stats(
         # work on compact corpora; measured 19.8 -> 12.9 s at sf100).
         # Round-robin, not group hash: group_col has ~20 values — a
         # group-keyed exchange would skew onto 20 reducers
-        try:
-            n_part = int(df.sparkSession.conf.get(
-                "spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            n_part = df.sparkSession.sparkContext.defaultParallelism
+        n_part = shuffle_partitions(df.sparkSession)
         tok = (
             df.select(F.col(group_col), F.col(text_col))
             .repartition(n_part)
@@ -909,11 +907,7 @@ def tfidf_top_terms(
         # robin, not group hash: group_col has few values (the
         # lexical_stats rationale) and the term key only exists after
         # the explode.
-        try:
-            n_part = int(df.sparkSession.conf.get(
-                "spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            n_part = df.sparkSession.sparkContext.defaultParallelism
+        n_part = shuffle_partitions(df.sparkSession)
         tok = (
             df.select(F.col(group_col), F.col(text_col))
             .repartition(n_part)

@@ -26,8 +26,19 @@ partial states, which coalescing handles fine.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def shuffle_partitions(spark: SparkSession) -> int:
+    """The session's ``spark.sql.shuffle.partitions`` as an int.  When
+    that conf is non-numeric (some managed platforms set ``"auto"``), the
+    cluster's ``defaultParallelism`` — cores — is the fallback: the
+    cores-not-bytes parallelism every explicit spread or pin wants."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism
 
 
 def pin_partitioning(df: DataFrame, keys: list[str]) -> DataFrame:
@@ -40,14 +51,9 @@ def pin_partitioning(df: DataFrame, keys: list[str]) -> DataFrame:
     exchange (hash partitioning on a subset of the grouping keys satisfies
     the clustered distribution).
 
-    The pinned count comes from ``spark.sql.shuffle.partitions``; when
-    that conf is non-numeric (some managed platforms set ``"auto"``), the
-    cluster's ``defaultParallelism`` — cores — is the fallback, which is
-    exactly the cores-not-bytes parallelism this pin exists to restore.
+    The pinned count is :func:`shuffle_partitions` — the session's
+    ``spark.sql.shuffle.partitions``, or ``defaultParallelism`` when that
+    conf is non-numeric.
     """
-    raw = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    try:
-        n = int(raw)
-    except (TypeError, ValueError):
-        n = df.sparkSession.sparkContext.defaultParallelism
+    n = shuffle_partitions(df.sparkSession)
     return df.repartition(n, *[F.col(k) for k in keys])

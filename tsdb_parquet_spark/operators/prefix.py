@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .partitioning import shuffle_partitions
+
 
 def distributed_cumsum(
     df: DataFrame,
@@ -51,10 +53,7 @@ def distributed_cumsum(
     """
     spark = df.sparkSession
     if num_buckets is None:
-        try:
-            num_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except ValueError:
-            num_buckets = spark.sparkContext.defaultParallelism
+        num_buckets = shuffle_partitions(spark)
     if bucket_bounds is None:
         row = df.agg(
             F.min(order_col).alias("lo"), F.max(order_col).alias("hi")
@@ -218,10 +217,7 @@ def budget_select(
     spark = df.sparkSession
     prio = F.col(priority_col) if isinstance(priority_col, str) else priority_col
     if num_buckets is None:
-        try:
-            num_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except ValueError:
-            num_buckets = spark.sparkContext.defaultParallelism
+        num_buckets = shuffle_partitions(spark)
     if bucket_key is None:
         dt = df.select(prio.alias("_p")).schema[0].dataType
         if not isinstance(dt, NumericType):

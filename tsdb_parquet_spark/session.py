@@ -110,7 +110,7 @@ def get_spark(
         # hash exchanges over the q28_bucketed events table).  Trade-off:
         # the join inherits the subset key's bucket count/skew — fine by
         # construction here, where bucket counts track cluster
-        # parallelism (sources.ensure_bucketed_table docstring).
+        # parallelism (__spark_entry__._BUCKETS).
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -8,9 +8,17 @@ default) — so callers pass a DDL schema or accept a one-file inference
 capped by ``samplingRatio``.  Timestamps are normalized the same way the
 parquet path normalizes TIMESTAMP(NANOS) (tables.load_table), so a table
 is identical no matter which format it arrived in.
+
+The at-rest side lives here too: :class:`Layout` declares one derived
+table (materialized aggregate, bucketed or partitioned layout) once, and
+:func:`route_at_rest` / :func:`ensure_rung` serve a query family from
+the best rung of its layout ladder.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -125,15 +133,14 @@ def source_fingerprint(paths: str | list[str]) -> str:
 
 # r15 (guide §1.2 per-task/driver work): (applicationId, final table
 # name) pairs this process has ALREADY resolved to a live catalog
-# table.  Every ensure_*/peek_* call otherwise pays 1-2 py4j catalog
+# table.  Every Layout.ensure/peek otherwise pays 1-2 py4j catalog
 # round-trips (tableExists + the stale-sibling listTables sweep) —
 # measured as the dominant driver-side cost of the bucketed/auto
 # entries at bench scale (catalog jobs + gaps, not stages).  The memo
 # is METADATA-only (never results): a fingerprinted name can only go
 # stale if the source files change, which changes the fingerprint and
-# misses the memo; unfingerprinted callers keep their semantics
-# because a hit still resolves through spark.table().  Keyed by
-# applicationId so a restarted session re-probes from scratch.
+# misses the memo; unfingerprinted layouts are never memoized.  Keyed
+# by applicationId so a restarted session re-probes from scratch.
 _RESOLVED: set[tuple[str, str]] = set()
 
 
@@ -151,99 +158,13 @@ def _memo_hit(spark: SparkSession, memo: tuple[str, str]):
         return None
 
 
-def ensure_bucketed_table(
-    spark: SparkSession,
-    table_name: str,
-    build_df,
-    bucket_col: str | list[str],
-    num_buckets: int = 16,
-    sort_col: str | list[str] | None = None,
-    source_paths: str | list[str] | None = None,
-) -> DataFrame:
-    """Idempotent bucketed table across sessions.
-
-    The in-memory session catalog forgets tables on restart while the
-    warehouse directory persists, so a cold session can't just
-    ``saveAsTable`` again (LOCATION_ALREADY_EXISTS) — and rewriting
-    would waste the whole point of bucketing (ONE write-time shuffle
-    amortized over many queries).  Resolution order:
-
-    1. table in catalog → use it;
-    2. complete files on disk (``_SUCCESS`` marker from the committed
-       write) → re-register them as a bucketed table via DDL (bucket
-       ids live in the file names, so the layout survives the catalog);
-    3. else → clear any partial debris and write via
-       :func:`write_bucketed`.
-
-    ``build_df`` is a thunk returning the source DataFrame — only
-    evaluated when (re)writing or for schema DDL, never scanned in
-    case 1.
-
-    LOCAL-WAREHOUSE assumption: the committed-files check walks the
-    warehouse with ``os.path`` after stripping a ``file:`` prefix — an
-    ``hdfs://``/object-store warehouse always misses it and falls to
-    the rewrite path; route the existence check through the Hadoop
-    ``FileSystem`` API (maintenance._fs) before deploying there.  The
-    same applies to :func:`ensure_table` and
-    ``llm.similarity.ensure_ivf_layout``'s centroids sidecar.
-
-    ``source_paths``: when given, the bucket count and a
-    :func:`source_fingerprint` of those files are appended to
-    ``table_name``, so regenerating the source data under the same
-    directory name — or re-tuning ``num_buckets`` — invalidates the
-    cache instead of silently serving a stale layout; stale same-prefix
-    siblings are dropped.
-    """
-    import os
-    import shutil
-
-    if source_paths is not None:
-        base = table_name
-        table_name = f"{base}_b{num_buckets}_{source_fingerprint(source_paths)}"
-        memo = (spark.sparkContext.applicationId, table_name)
-        hit = _memo_hit(spark, memo)
-        if hit is not None:
-            return hit
-        _drop_stale_siblings(spark, base, keep=table_name)
-    else:
-        memo = None
-    if spark.catalog.tableExists(table_name):
-        if memo is not None:
-            _RESOLVED.add(memo)
-        return spark.table(table_name)
+def _warehouse_dir(spark: SparkSession) -> str:
     wh = spark.conf.get("spark.sql.warehouse.dir")
     for pre in ("file://", "file:"):
         if wh.startswith(pre):
             wh = wh[len(pre):]
             break
-    loc = os.path.join(wh, table_name)
-    bcols = _as_cols(bucket_col)
-    scols = _as_cols(sort_col)
-    if os.path.exists(os.path.join(loc, "_SUCCESS")):
-        df = build_df()
-        schema_ddl = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-        )
-        sort = (
-            "SORTED BY (" + ", ".join(f"`{c}`" for c in scols) + ") "
-            if scols
-            else ""
-        )
-        clustered = ", ".join(f"`{c}`" for c in bcols)
-        spark.sql(
-            f"CREATE TABLE `{table_name}` ({schema_ddl}) USING parquet "
-            f"CLUSTERED BY ({clustered}) {sort}INTO {num_buckets} BUCKETS "
-            f"LOCATION '{loc}'"
-        )
-        if memo is not None:
-            _RESOLVED.add(memo)
-        return spark.table(table_name)
-    if os.path.exists(loc):
-        shutil.rmtree(loc)
-    write_bucketed(build_df(), table_name, bucket_col, num_buckets, sort_col)
-    if memo is not None:
-        _RESOLVED.add(memo)
-    return spark.table(table_name)
+    return wh
 
 
 def _drop_stale_siblings(spark: SparkSession, base: str, keep: str) -> None:
@@ -260,190 +181,148 @@ def _drop_stale_siblings(spark: SparkSession, base: str, keep: str) -> None:
     for t in spark.catalog.listTables():
         if pat.fullmatch(t.name) and t.name != keep.lower():
             spark.sql(f"DROP TABLE IF EXISTS `{t.name}`")
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    for pre in ("file://", "file:"):
-        if wh.startswith(pre):
-            wh = wh[len(pre):]
-            break
+    wh = _warehouse_dir(spark)
     if os.path.isdir(wh):
         for d in os.listdir(wh):
             if pat.fullmatch(d) and d != keep.lower():
                 shutil.rmtree(os.path.join(wh, d), ignore_errors=True)
 
 
-def ensure_table(
-    spark: SparkSession,
-    table_name: str,
-    build_df,
-    source_paths: str | list[str] | None = None,
-    partition_by: str | list[str] | None = None,
-) -> DataFrame:
-    """Idempotent UNBUCKETED managed parquet table — the plain-layout
-    sibling of :func:`ensure_bucketed_table` (same catalog → disk →
-    write resolution order, same source fingerprint in the name, same
-    stale-sibling cleanup).  For small derived dimensions (e.g. the
-    series dictionary of :func:`~tsdb_parquet_spark.timeseries.
-    ensure_series_dim_layout`) where bucket metadata buys nothing.
+def _quoted(cols: list[str]) -> str:
+    return ", ".join(f"`{c}`" for c in cols)
 
-    ``partition_by``: hive-partition the layout on these columns —
-    queries filtering on them prune whole directories at planning time
-    (the ANN cell layout of ``llm/similarity.ensure_ivf_layout``).  A
-    partitioned write still commits a root ``_SUCCESS``, so the on-disk
-    re-registration path only additionally needs partition recovery."""
-    import os
-    import shutil
 
-    pcols = _as_cols(partition_by)
-    if source_paths is not None:
-        base = table_name
-        table_name = f"{base}_{source_fingerprint(source_paths)}"
-        memo = (spark.sparkContext.applicationId, table_name)
-        hit = _memo_hit(spark, memo)
-        if hit is not None:
-            return hit
-        _drop_stale_siblings(spark, base, keep=table_name)
-    else:
+@dataclass(frozen=True)
+class Layout:
+    """One at-rest layout, declared once: what ``build`` computes, which
+    ``source_paths`` it derives from, and how it lies on disk (plain,
+    hive-``partition_by``, or ``bucket_col``-bucketed into
+    ``num_buckets`` and ``sort_col``-sorted).  :meth:`ensure` (build on
+    a miss) and :meth:`peek` (never build) share one resolver, so the
+    pinned rung that builds a layout and the router that probes it can
+    never disagree on its name or shape.
+
+    Table name: ``{base}`` without ``source_paths``; otherwise a
+    :func:`source_fingerprint` of those files is appended —
+    ``{base}_b{num_buckets}_{fp}`` when bucketed, ``{base}_{fp}`` when
+    not — so regenerating the sources under the same directory name (or
+    re-tuning the bucket count) invalidates the layout instead of
+    silently serving a stale one.
+
+    Resolution order: the ``_RESOLVED`` memo (one ``spark.table`` call);
+    the session catalog; committed files on disk (a ``_SUCCESS`` marker
+    from the committed write), re-registered through DDL with the schema
+    read from the files, because the in-memory catalog forgets tables on
+    restart while the warehouse persists (bucket ids live in the file
+    names, so co-location survives; partitions are recovered); and, for
+    :meth:`ensure` only, dropping stale same-base siblings, clearing any
+    partial debris, and writing ``build()``.
+
+    ``build`` is a thunk, evaluated only when writing — never for a
+    catalog or on-disk hit.
+
+    LOCAL-WAREHOUSE assumption: the committed-files check walks the
+    warehouse with ``os.path`` after stripping a ``file:`` prefix — an
+    ``hdfs://``/object-store warehouse always misses it and falls to the
+    rewrite path; route the existence check through the Hadoop
+    ``FileSystem`` API (maintenance._fs) before deploying there.
+    """
+
+    base: str
+    build: Callable[[], DataFrame] | None = None
+    source_paths: str | list[str] | None = None
+    bucket_col: str | list[str] | None = None
+    num_buckets: int = 16
+    sort_col: str | list[str] | None = None
+    partition_by: str | list[str] | None = None
+
+    def table_name(self) -> str:
+        if self.source_paths is None:
+            return self.base
+        fp = source_fingerprint(self.source_paths)
+        if self.bucket_col is not None:
+            return f"{self.base}_b{self.num_buckets}_{fp}"
+        return f"{self.base}_{fp}"
+
+    def ensure(self, spark: SparkSession) -> DataFrame:
+        """The layout's table, built on a miss."""
+        return self._resolve(spark, build=True)
+
+    def peek(self, spark: SparkSession) -> DataFrame | None:
+        """READ-ONLY resolution: the committed, fingerprint-fresh table,
+        else ``None`` — never builds, never drops.  The probe half of
+        :func:`route_at_rest`: a router must ask "is this rung
+        available?" without paying the rung's build cost on a miss."""
+        return self._resolve(spark, build=False)
+
+    def _resolve(self, spark: SparkSession, build: bool) -> DataFrame | None:
+        import os
+        import shutil
+
+        name = self.table_name()
+        # positive resolutions only, fingerprinted names only: a MISS
+        # stays a live probe (the table may be built later this session)
         memo = None
-    if spark.catalog.tableExists(table_name):
+        if self.source_paths is not None:
+            memo = (spark.sparkContext.applicationId, name)
+            hit = _memo_hit(spark, memo)
+            if hit is not None:
+                return hit
+        if not spark.catalog.tableExists(name):
+            loc = os.path.join(_warehouse_dir(spark), name)
+            if os.path.exists(os.path.join(loc, "_SUCCESS")):
+                self._register(spark, name, loc)
+            elif not build:
+                return None
+            else:
+                if memo is not None:
+                    _drop_stale_siblings(spark, self.base, keep=name)
+                if os.path.exists(loc):
+                    shutil.rmtree(loc)
+                self._write(name)
         if memo is not None:
             _RESOLVED.add(memo)
-        return spark.table(table_name)
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    for pre in ("file://", "file:"):
-        if wh.startswith(pre):
-            wh = wh[len(pre):]
-            break
-    loc = os.path.join(wh, table_name)
-    if os.path.exists(os.path.join(loc, "_SUCCESS")):
-        df = build_df()
-        schema_ddl = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
+        return spark.table(name)
+
+    def _register(self, spark: SparkSession, name: str, loc: str) -> None:
+        schema = spark.read.parquet(loc).schema
+        cols = ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
         )
-        part = (
-            "PARTITIONED BY (" + ", ".join(f"`{c}`" for c in pcols) + ") "
-            if pcols
-            else ""
-        )
+        pcols = _as_cols(self.partition_by)
+        spec = f"PARTITIONED BY ({_quoted(pcols)}) " if pcols else ""
+        if self.bucket_col is not None:
+            scols = _as_cols(self.sort_col)
+            sort = f"SORTED BY ({_quoted(scols)}) " if scols else ""
+            spec += (
+                f"CLUSTERED BY ({_quoted(_as_cols(self.bucket_col))}) "
+                f"{sort}INTO {self.num_buckets} BUCKETS "
+            )
         spark.sql(
-            f"CREATE TABLE `{table_name}` ({schema_ddl}) USING parquet "
-            f"{part}LOCATION '{loc}'"
+            f"CREATE TABLE `{name}` ({cols}) USING parquet {spec}"
+            f"LOCATION '{loc}'"
         )
         if pcols:
-            spark.sql(f"ALTER TABLE `{table_name}` RECOVER PARTITIONS")
-        if memo is not None:
-            _RESOLVED.add(memo)
-        return spark.table(table_name)
-    if os.path.exists(loc):
-        shutil.rmtree(loc)
-    writer = build_df().write.mode("overwrite").format("parquet")
-    if pcols:
-        writer = writer.partitionBy(*pcols)
-    writer.saveAsTable(table_name)
-    if memo is not None:
-        _RESOLVED.add(memo)
-    return spark.table(table_name)
+            spark.sql(f"ALTER TABLE `{name}` RECOVER PARTITIONS")
+
+    def _write(self, name: str) -> None:
+        df = self.build()
+        if self.bucket_col is not None:
+            write_bucketed(
+                df, name, self.bucket_col, self.num_buckets, self.sort_col
+            )
+            return
+        writer = df.write.mode("overwrite").format("parquet")
+        pcols = _as_cols(self.partition_by)
+        if pcols:
+            writer = writer.partitionBy(*pcols)
+        writer.saveAsTable(name)
 
 
-def _warehouse_dir(spark: SparkSession) -> str:
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    for pre in ("file://", "file:"):
-        if wh.startswith(pre):
-            wh = wh[len(pre):]
-            break
-    return wh
-
-
-def peek_table(
-    spark: SparkSession,
-    table_name: str,
-    source_paths: str | list[str] | None = None,
-) -> DataFrame | None:
-    """READ-ONLY resolution of an :func:`ensure_table` /
-    :func:`ensure_materialized` layout: return the committed,
-    fingerprint-FRESH table if one exists (catalog, else
-    ``_SUCCESS``-committed warehouse files), else ``None`` — never
-    build, never drop.  The probe half of layout auto-routing
-    (:func:`route_at_rest`): a router must be able to ask "is the mv
-    rung available?" without paying the mv's build cost on a miss
-    (``ensure_*`` would build), and without perturbing warehouse state
-    from a read path."""
-    import os
-
-    memo = None
-    if source_paths is not None:
-        table_name = f"{table_name}_{source_fingerprint(source_paths)}"
-        # positive resolutions only, fingerprinted names only: a MISS
-        # stays a live probe (the table may be built later this
-        # session); a fingerprinted hit re-verifies through _memo_hit
-        memo = (spark.sparkContext.applicationId, table_name)
-        hit = _memo_hit(spark, memo)
-        if hit is not None:
-            return hit
-    if spark.catalog.tableExists(table_name):
-        if memo is not None:
-            _RESOLVED.add(memo)
-        return spark.table(table_name)
-    loc = os.path.join(_warehouse_dir(spark), table_name)
-    if os.path.exists(os.path.join(loc, "_SUCCESS")):
-        # plain parquet read — serve-equivalent to the registered table
-        return spark.read.parquet(loc)
-    return None
-
-
-def peek_bucketed_table(
-    spark: SparkSession,
-    table_name: str,
-    bucket_col: str | list[str],
-    num_buckets: int = 16,
-    sort_col: str | list[str] | None = None,
-    source_paths: str | list[str] | None = None,
-) -> DataFrame | None:
-    """READ-ONLY resolution of an :func:`ensure_bucketed_table` layout:
-    the committed fingerprint-fresh bucketed table or ``None`` — never
-    build.  Unlike :func:`peek_table`, committed-on-disk files MUST be
-    re-registered through DDL (bucket ids live in file names; a plain
-    parquet read would lose the co-location the rung exists for); the
-    schema comes from the committed files themselves, so no build thunk
-    is needed."""
-    import os
-
-    memo = None
-    if source_paths is not None:
-        table_name = (
-            f"{table_name}_b{num_buckets}_{source_fingerprint(source_paths)}"
-        )
-        memo = (spark.sparkContext.applicationId, table_name)
-        hit = _memo_hit(spark, memo)
-        if hit is not None:
-            return hit
-    if spark.catalog.tableExists(table_name):
-        if memo is not None:
-            _RESOLVED.add(memo)
-        return spark.table(table_name)
-    loc = os.path.join(_warehouse_dir(spark), table_name)
-    if not os.path.exists(os.path.join(loc, "_SUCCESS")):
-        return None
-    schema = spark.read.parquet(loc).schema
-    schema_ddl = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-    )
-    bcols = _as_cols(bucket_col)
-    scols = _as_cols(sort_col)
-    sort = (
-        "SORTED BY (" + ", ".join(f"`{c}`" for c in scols) + ") "
-        if scols
-        else ""
-    )
-    clustered = ", ".join(f"`{c}`" for c in bcols)
-    spark.sql(
-        f"CREATE TABLE `{table_name}` ({schema_ddl}) USING parquet "
-        f"CLUSTERED BY ({clustered}) {sort}INTO {num_buckets} BUCKETS "
-        f"LOCATION '{loc}'"
-    )
-    if memo is not None:
-        _RESOLVED.add(memo)
-    return spark.table(table_name)
-
+# A rung of an at-rest ladder: (rung name, the layouts it reads, serve),
+# where serve(*tables) turns the layouts' tables — in list order — into
+# the query's answer.  A rung with no layouts (raw) always resolves.
+Rung = tuple[str, list[Layout], Callable[..., DataFrame]]
 
 # family -> rung chosen by the last route_at_rest resolution this
 # process ("mv" / "bucketed" / "raw" / ...).  bench.py surfaces it in
@@ -451,14 +330,18 @@ def peek_bucketed_table(
 ROUTE_LOG: dict[str, str] = {}
 
 
-def route_at_rest(family: str, rungs) -> DataFrame:
+def route_at_rest(
+    spark: SparkSession, family: str, rungs: list[Rung]
+) -> DataFrame:
     """Layout AUTO-ROUTING (verdict r13 #4 — the q09 size-gate
     generalized): resolve a query family to the best available at-rest
-    rung.  ``rungs`` is an ordered list of ``(rung_name, thunk)`` where
-    each thunk returns a DataFrame (rung available — e.g. a
-    :func:`peek_table` hit fed into the rung's serve body) or ``None``
-    (rung not materialized / stale).  First hit wins; the choice lands
-    in :data:`ROUTE_LOG` under ``family``.
+    rung.  ``rungs`` is an ordered list of ``(name, [Layout, ...],
+    serve)`` tuples; a rung resolves when every one of its layouts
+    :meth:`~Layout.peek`\\ s fresh, and is then answered by
+    ``serve(*tables)``.  First hit wins; the choice lands in
+    :data:`ROUTE_LOG` under ``family``.  :func:`ensure_rung` serves the
+    same rung objects pinned (building on a miss), so a family's layouts
+    and serve bodies are written once for both.
 
     This makes the amortization ladder a PROPERTY OF THE ENGINE: a
     caller asks for the query; whether it is served from a
@@ -468,12 +351,27 @@ def route_at_rest(family: str, rungs) -> DataFrame:
     materialized view matches a query subtree.  All rungs share one
     oracle (identical results by construction), so routing can never
     change answers, only plans."""
-    for rung, thunk in rungs:
-        df = thunk()
-        if df is not None:
+    for rung, layouts, serve in rungs:
+        tables = []
+        for layout in layouts:
+            df = layout.peek(spark)
+            if df is None:
+                break
+            tables.append(df)
+        else:
             ROUTE_LOG[family] = rung
-            return df
+            return serve(*tables)
     raise ValueError(f"route_at_rest({family}): no rung resolved")
+
+
+def ensure_rung(spark: SparkSession, rungs: list[Rung], rung: str) -> DataFrame:
+    """The PINNED form of :func:`route_at_rest`: serve the rung named
+    ``rung``, building its layouts on a miss — each rung individually
+    measurable, from the same rung objects the router probes."""
+    for name, layouts, serve in rungs:
+        if name == rung:
+            return serve(*[layout.ensure(spark) for layout in layouts])
+    raise KeyError(rung)
 
 
 def read_orc(spark: SparkSession, path: str, **options: str) -> DataFrame:
@@ -551,33 +449,3 @@ def binary_dir_to_multimodal(
         F.col("path").alias("source_uri"),
         F.col("length").alias("source_bytes"),
     )
-
-
-def ensure_materialized(
-    spark: SparkSession,
-    table_name: str,
-    build_df,
-    source_paths: str | list[str] | None = None,
-) -> DataFrame:
-    """Idempotent MATERIALIZED AGGREGATE across sessions — the plain-
-    parquet sibling of :func:`ensure_bucketed_table` for dashboard-class
-    repeated aggregates: compute once at rest, serve every subsequent
-    query from the (tiny) result table.
-
-    Same resolution order (catalog → committed files re-registered via
-    DDL → build+write) and the same ``source_fingerprint`` staleness
-    contract: the table name embeds a content fingerprint of the source
-    files, so regenerated sources invalidate the cache instead of
-    silently serving stale results (stale same-prefix siblings are
-    dropped).  At 100 TB this is the continuous-aggregate pattern
-    (rollup.py) applied to a relational fact join — the incremental-
-    refresh path for late-arriving facts is rollup.py's; this helper
-    covers the recompute-from-fingerprint case, which is exact by
-    construction.
-
-    Mechanically this IS :func:`ensure_table` applied to a query result
-    instead of a base dimension — delegated rather than duplicated; the
-    separate name documents the intent (materialized view vs derived
-    dimension) at call sites.
-    """
-    return ensure_table(spark, table_name, build_df, source_paths)

@@ -348,7 +348,7 @@ def stream_static_enrich(
 
     100 TB shape: dimension tables are broadcast-sized by definition
     here; for a dimension too large to broadcast, pre-bucket BOTH
-    sides on the key (sources.ensure_bucketed_table) and let the
+    sides on the key (a bucketed sources.Layout) and let the
     stream reuse the at-rest layout instead.
     """
     d = F.broadcast(dim.select(dim_key, *dim_cols))

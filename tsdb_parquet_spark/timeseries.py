@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from .matchers import Matcher, NullSemantics, apply_matchers, wide_label_col
 from .operators.aggregates import exact_value_sum
+from .sources import Layout
 
 # Fixed columns of the tsdb model (hello.go:120-138): time INT64 epoch-ms,
 # value DOUBLE.  Everything else is a dynamic label column.
@@ -186,7 +187,7 @@ def regroup_series_stats(
     return df.groupBy(*labels).agg(*aggs)
 
 
-def ensure_series_dim_layout(
+def series_dim_layouts(
     spark: SparkSession,
     base_name: str,
     build_df: Callable[[], DataFrame],
@@ -194,7 +195,7 @@ def ensure_series_dim_layout(
     num_buckets: int = 32,
     source_paths: str | list[str] | None = None,
     value_scale: int = 6,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[Layout, Layout]:
     """At-rest series-dictionary layout — the 100 TB answer to the q06
     regroup floor recorded in SCALE.md §5b.
 
@@ -222,12 +223,10 @@ def ensure_series_dim_layout(
     0.92 s (see SCALE.md §5c).
 
     Both tables cache across sessions keyed by the source fingerprint
-    (:func:`~tsdb_parquet_spark.sources.ensure_bucketed_table` /
-    :func:`~tsdb_parquet_spark.sources.ensure_table` semantics).
-    Returns ``(facts_df, dim_df)``.
+    (:class:`~tsdb_parquet_spark.sources.Layout` semantics).  Returns
+    the ``(facts, dim)`` layouts; ``ensure`` builds them (facts first
+    ensures dim — the join needs it), ``peek`` probes them read-only.
     """
-    from .sources import ensure_bucketed_table, ensure_table
-
     unit = 10**value_scale
 
     def build_dim() -> DataFrame:
@@ -242,11 +241,10 @@ def ensure_series_dim_layout(
             F.row_number().over(w).cast("int").alias("series_id"), *labels
         )
 
-    dim = ensure_table(
-        spark, f"{base_name}_dim", build_dim, source_paths=source_paths
-    )
+    dim_layout = Layout(f"{base_name}_dim", build_dim, source_paths)
 
     def build_facts() -> DataFrame:
+        dim = dim_layout.ensure(spark)
         src = build_df()
         cond = None
         for c in labels:
@@ -261,16 +259,15 @@ def ensure_series_dim_layout(
             .alias("value_u"),
         )
 
-    facts = ensure_bucketed_table(
-        spark,
+    facts_layout = Layout(
         f"{base_name}_facts",
         build_facts,
-        "series_id",
+        source_paths,
+        bucket_col="series_id",
         num_buckets=num_buckets,
         sort_col=["series_id", TIME_COL],
-        source_paths=source_paths,
     )
-    return facts, dim
+    return facts_layout, dim_layout
 
 
 def regroup_series_stats_dim(
@@ -767,14 +764,12 @@ def ensure_hybrid_label_layout(
     columns while an unbounded user-label tail stays one map column
     instead of tens of thousands of mostly-NULL wide columns.
 
-    Idempotent across sessions via :func:`sources.ensure_table` — the
+    Idempotent across sessions via :class:`sources.Layout` — the
     table name embeds the source fingerprint, so regenerated fixtures
     rebuild instead of serving stale rows.  NULL/empty cold labels are
     absent from the map (Prometheus absent-label semantics, same contract
     as :func:`long_from_wide`, hello.go:339-349).
     """
-    from . import sources
-
     hot_cols = [f"{LABEL_PREFIX}{h}" for h in hot]
     cold = [c for c in label_columns(df_wide) if c not in set(hot_cols)]
 
@@ -786,7 +781,7 @@ def ensure_hybrid_label_layout(
         )
         return df_wide.select(TIME_COL, VALUE_COL, *hot_cols, m.alias("labels"))
 
-    return sources.ensure_table(spark, table_name, build, source_paths)
+    return Layout(table_name, build, source_paths).ensure(spark)
 
 
 def load_tsdb(
