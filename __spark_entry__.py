@@ -66,7 +66,11 @@ from tsdb_parquet_spark.operators.windows import (
     sessionize,
     top_k_per_group,
 )
-from tsdb_parquet_spark.streaming.windows import tumbling_counts_batch
+from tsdb_parquet_spark.streaming.windows import (
+    bounded_replay,
+    read_events_stream,
+    tumbling_counts_batch,
+)
 from tsdb_parquet_spark.sources import Layout, Rung, ensure_rung, route_at_rest
 from tsdb_parquet_spark.tables import TSDB_PATH, load_table, table_path
 from tsdb_parquet_spark.timeseries import (
@@ -925,32 +929,17 @@ def q85_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate exactly (the late-data policy only engages on multi-batch
     arrival order, exercised in tests/test_streaming.py)."""
     from tsdb_parquet_spark.streaming.windows import tumbling_counts
-    from tsdb_parquet_spark.tables import _normalize_ns_timestamps, table_path
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = table_path(sf_dir, "events")
-    schema = spark.read.parquet(path).schema
-    # the file stream source wants a DIRECTORY; a single-file table is
-    # selected out of its parent dir with a name glob
-    reader = spark.readStream.schema(schema)
-    if not os.path.isdir(path):
-        reader = reader.option("pathGlobFilter", os.path.basename(path))
-        path = os.path.dirname(path)
-    stream = _normalize_ns_timestamps(reader.parquet(path))
     name = "q85_mem_" + _sf_tag(sf_dir)
-    for q in spark.streams.active:  # re-entrant within one session
-        if q.name == name:
-            q.stop()
-    q = (
-        tumbling_counts(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    with bounded_replay(spark, name) as replay:
+        stream = read_events_stream(
+            spark, table_path(sf_dir, "events"), max_files_per_trigger=None
+        )
+        replay.run(
+            tumbling_counts(stream).writeStream.format("memory")
+            .outputMode("complete")
+        )
     return spark.table(name).orderBy("bucket_start", "event_type")
 
 
@@ -977,53 +966,28 @@ def q86_streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame
     is only possible if each batch resumed the previous batches' state.
     The running-total sum is order-independent (exact integer-valued
     doubles), so a plain repartition split suffices."""
-    import shutil
-    import tempfile
-
     from tsdb_parquet_spark.streaming.stateful import running_totals
-    from tsdb_parquet_spark.tables import load_table
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    tag = _sf_tag(sf_dir)
-    split_dir = os.path.join(tempfile.gettempdir(), f"tsdb_spark_q86_{tag}__src")
-    shutil.rmtree(split_dir, ignore_errors=True)
-    load_table(spark, sf_dir, "events").select(
-        "user_id",
-        # exact 1e-4 units as integer-valued doubles (< 2^53 at any sf
-        # here): float addition over integers is exact, so the stateful
-        # sum is reproducible regardless of pandas batch order
-        F.floor(F.col("value") * 10000 + F.lit(0.5))
-        .cast("double")
-        .alias("value"),
-    ).repartition(3).write.mode("overwrite").parquet(split_dir)
-    schema = spark.read.parquet(split_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split_dir)
-    )
-    name = "q86_mem_" + tag
-    for q in spark.streams.active:  # re-entrant within one session
-        if q.name == name:
-            q.stop()
-    q = (
-        running_totals(stream, key_col="user_id", value_col="value")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    # NOT awaitTermination: the eviction timeout keeps scheduling empty
-    # state-cleanup batches, so the query never self-terminates — drain
-    # (all start-time files processed) then stop (helper docstring)
-    from tsdb_parquet_spark.streaming.windows import drain_available_now
-
-    drain_available_now(q)
-    n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
-    if n_batches < 3:
-        raise AssertionError(
-            f"q86 multi-batch gate: expected >=3 micro-batches, got {n_batches}"
+    name = "q86_mem_" + _sf_tag(sf_dir)
+    with bounded_replay(spark, name) as replay:
+        split_dir = os.path.join(replay.dir, "src")
+        load_table(spark, sf_dir, "events").select(
+            "user_id",
+            # exact 1e-4 units as integer-valued doubles (< 2^53 at any
+            # sf here): float addition over integers is exact, so the
+            # stateful sum is reproducible regardless of pandas batch order
+            F.floor(F.col("value") * 10000 + F.lit(0.5))
+            .cast("double")
+            .alias("value"),
+        ).repartition(3).write.parquet(split_dir)
+        stream = read_events_stream(spark, split_dir)
+        # drained, not awaited: the eviction timeout keeps scheduling
+        # empty state-cleanup batches, so the query never self-terminates
+        replay.run(
+            running_totals(stream, key_col="user_id", value_col="value")
+            .writeStream.format("memory").outputMode("update"),
+            drained=True, min_batches=3,
         )
     tbl = spark.table(name)
     w = Window.partitionBy("key")
@@ -1037,6 +1001,23 @@ def q86_streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .orderBy("user_id")
     )
+
+
+def _write_replay_slices(split_dir: str, slices: list[DataFrame]) -> None:
+    """Write each slice as ONE parquet file in ``split_dir`` with strictly
+    increasing mtimes: FileStreamSource schedules the oldest file first,
+    so under ``maxFilesPerTrigger=1`` slice i is micro-batch i."""
+    import shutil
+
+    os.makedirs(split_dir)
+    for i, sl in enumerate(slices):
+        tmp = f"{split_dir}__tmp{i}"
+        sl.coalesce(1).write.parquet(tmp)
+        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+        dst = os.path.join(split_dir, f"slice{i}.parquet")
+        os.rename(os.path.join(tmp, part), dst)
+        shutil.rmtree(tmp)
+        os.utime(dst, (1_000_000_000 + i * 60, 1_000_000_000 + i * 60))
 
 
 def q90_streaming_counter_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1061,17 +1042,9 @@ def q90_streaming_counter_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-micro-batch state carry of the (last_value, increase)
     recurrence itself.  Late-sample drop and staleness eviction stay
     pytest-exercised."""
-    import shutil
-    import tempfile
-
     from tsdb_parquet_spark.streaming.stateful import streaming_counter_rate
-    from tsdb_parquet_spark.streaming.windows import drain_available_now
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    tag = _sf_tag(sf_dir)
-    split_dir = os.path.join(tempfile.gettempdir(), f"tsdb_spark_q90_{tag}__src")
-    shutil.rmtree(split_dir, ignore_errors=True)
-    os.makedirs(split_dir)
     src = (
         spark.read.parquet(TSDB_PATH)  # engine-owned fixture, same as oracle
         .filter(F.col("label_name") == "prometheus_http_requests_total")
@@ -1092,37 +1065,14 @@ def q90_streaming_counter_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         src.filter((F.col("time") > cuts[0]) & (F.col("time") <= cuts[1])),
         src.filter(F.col("time") > cuts[1]),
     ]
-    for i, sl in enumerate(slices):
-        tmp = f"{split_dir}__tmp{i}"
-        sl.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        dst = os.path.join(split_dir, f"slice{i}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.utime(dst, (1_000_000_000 + i * 60, 1_000_000_000 + i * 60))
-    schema = spark.read.parquet(split_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split_dir)
-    )
-    name = "q90_mem_" + tag
-    for q in spark.streams.active:  # re-entrant within one session
-        if q.name == name:
-            q.stop()
-    q = (
-        streaming_counter_rate(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain_available_now(q)
-    n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
-    if n_batches < 3:
-        raise AssertionError(
-            f"q90 multi-batch gate: expected >=3 micro-batches, got {n_batches}"
+    name = "q90_mem_" + _sf_tag(sf_dir)
+    with bounded_replay(spark, name) as replay:
+        split_dir = os.path.join(replay.dir, "src")
+        _write_replay_slices(split_dir, slices)
+        replay.run(
+            streaming_counter_rate(read_events_stream(spark, split_dir))
+            .writeStream.format("memory").outputMode("update"),
+            drained=True, min_batches=3,
         )
     tbl = spark.table(name)
     w = Window.partitionBy("key")
@@ -1281,34 +1231,20 @@ def q103_streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs UNION unmatched views whose bound clears the final
     watermark."""
     from tsdb_parquet_spark.streaming.windows import stream_interval_join
-    from tsdb_parquet_spark.tables import _normalize_ns_timestamps, table_path
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = table_path(sf_dir, "events")
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
-    if not os.path.isdir(path):
-        reader = reader.option("pathGlobFilter", os.path.basename(path))
-        path = os.path.dirname(path)
-    stream = _normalize_ns_timestamps(reader.parquet(path))
     name = "q103_mem_" + _sf_tag(sf_dir)
-    for q in spark.streams.active:  # re-entrant within one session
-        if q.name == name:
-            q.stop()
-    q = (
-        stream_interval_join(
-            stream.filter(F.col("event_type") == "view"),
-            stream.filter(F.col("event_type") == "click"),
-            interval="10 minutes", watermark="30 minutes", how="left_outer",
+    with bounded_replay(spark, name) as replay:
+        stream = read_events_stream(
+            spark, table_path(sf_dir, "events"), max_files_per_trigger=None
         )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+        replay.run(
+            stream_interval_join(
+                stream.filter(F.col("event_type") == "view"),
+                stream.filter(F.col("event_type") == "click"),
+                interval="10 minutes", watermark="30 minutes", how="left_outer",
+            ).writeStream.format("memory").outputMode("append")
+        )
     return (
         spark.table(name)
         .select("user_id", "l_event", "r_event")
@@ -1545,32 +1481,17 @@ def q100_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_ts + gap still merges (break is strictly ``>``), and
     session_end = last event + gap."""
     from tsdb_parquet_spark.streaming.windows import session_counts
-    from tsdb_parquet_spark.tables import _normalize_ns_timestamps, table_path
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = table_path(sf_dir, "events")
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
-    if not os.path.isdir(path):
-        reader = reader.option("pathGlobFilter", os.path.basename(path))
-        path = os.path.dirname(path)
-    stream = _normalize_ns_timestamps(reader.parquet(path)).select(
-        "user_id", "ts"
-    )
     name = "q100_mem_" + _sf_tag(sf_dir)
-    for q in spark.streams.active:  # re-entrant within one session
-        if q.name == name:
-            q.stop()
-    q = (
-        session_counts(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    with bounded_replay(spark, name) as replay:
+        stream = read_events_stream(
+            spark, table_path(sf_dir, "events"), max_files_per_trigger=None
+        ).select("user_id", "ts")
+        replay.run(
+            session_counts(stream).writeStream.format("memory")
+            .outputMode("complete")
+        )
     return spark.table(name).orderBy("user_id", "session_start")
 
 
@@ -1587,32 +1508,20 @@ def q101_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay equals the batch interval join exactly — the plain-SQL
     oracle."""
     from tsdb_parquet_spark.streaming.windows import stream_interval_join
-    from tsdb_parquet_spark.tables import _normalize_ns_timestamps, table_path
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = table_path(sf_dir, "events")
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
-    if not os.path.isdir(path):
-        reader = reader.option("pathGlobFilter", os.path.basename(path))
-        path = os.path.dirname(path)
-    stream = _normalize_ns_timestamps(reader.parquet(path))
-    left = stream.filter(F.col("event_type") == "view")
-    right = stream.filter(F.col("event_type") == "click")
     name = "q101_mem_" + _sf_tag(sf_dir)
-    for q in spark.streams.active:  # re-entrant within one session
-        if q.name == name:
-            q.stop()
-    q = (
-        stream_interval_join(left, right, interval="10 minutes")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    with bounded_replay(spark, name) as replay:
+        stream = read_events_stream(
+            spark, table_path(sf_dir, "events"), max_files_per_trigger=None
+        )
+        replay.run(
+            stream_interval_join(
+                stream.filter(F.col("event_type") == "view"),
+                stream.filter(F.col("event_type") == "click"),
+                interval="10 minutes",
+            ).writeStream.format("memory").outputMode("append")
+        )
     return (
         spark.table(name)
         .select(
@@ -2433,22 +2342,75 @@ def q74_crossdoc_ngram_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cross_doc_ngram_dup(docs).orderBy("doc_id")
 
 
+def _fixture_block(spark: SparkSession) -> str:
+    """The committed ``data/tsdb_block`` fixture (the ingest of the
+    reference's block) written back into a TSDB block by
+    ``tsdb_block.write_block`` — the XOR codec is lossless — so the
+    ``format("tsdb")`` gate needs nothing outside the repo.  Label
+    columns map back to label names (``label_name`` -> ``__name__``,
+    ``label_x`` -> ``x``; a null cell is an absent label).  Written once
+    per fixture content under the warehouse: built in a temp dir and
+    renamed into place, then reused."""
+    import shutil
+    import tempfile
+
+    import pyarrow.parquet as pq
+
+    from tsdb_parquet_spark.sources import _warehouse_dir, source_fingerprint
+    from tsdb_parquet_spark.tsdb_block import METRIC_LABEL, write_block
+
+    wh = _warehouse_dir(spark)
+    dst = os.path.join(
+        wh, f"tsdb_fixture_block_{source_fingerprint(TSDB_BLOCK_PATH)}"
+    )
+    if os.path.isdir(dst):
+        return dst
+    t = pq.read_table(TSDB_BLOCK_PATH)
+    label_cols = [c for c in t.column_names if c.startswith("label_")]
+    names = [
+        METRIC_LABEL if c == "label_name" else c[len("label_"):]
+        for c in label_cols
+    ]
+    series: dict[tuple, list[tuple[int, float]]] = {}
+    for key, tv in zip(
+        zip(*(t.column(c).to_pylist() for c in label_cols)),
+        zip(t.column("time").to_pylist(), t.column("value").to_pylist()),
+    ):
+        series.setdefault(key, []).append(tv)
+    os.makedirs(wh, exist_ok=True)
+    tmp = tempfile.mkdtemp(dir=wh, prefix=".tsdb_fixture_block_")
+    try:
+        write_block(tmp, [
+            ({n: v for n, v in zip(names, key) if v is not None}, samples)
+            for key, samples in series.items()
+        ])
+        os.rename(tmp, dst)
+    except OSError:
+        if not os.path.isdir(dst):  # else a concurrent writer won
+            raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return dst
+
+
 def q75_tsdb_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The Spark-4 Python DataSource (datasource.py) as a query surface:
-    # scan the reference's committed block bytes via format("tsdb") —
-    # planning reads only the index, executors decode (block x series-
-    # range) slices to Arrow batches — and aggregate per metric.  The
-    # oracle reads the ingested-parquet artifact (decode-equivalence of
-    # the two paths is asserted row-exactly in tests/test_datasource.py).
+    # scan a TSDB block via format("tsdb") — planning reads only the
+    # index, executors decode (block x series-range) slices to Arrow
+    # batches — and aggregate per metric.  The block is the committed
+    # ingested-parquet fixture written back by write_block
+    # (_fixture_block); the oracle reads that parquet fixture
+    # (decode-equivalence of block and parquet paths is asserted
+    # row-exactly in tests/test_datasource.py).
     # Value aggregates are min/max (exact doubles, no decimal rounding):
     # the block's full-mantissa doubles make decimal-cast sums diverge
     # between engines at the last scale digit, unlike the fixtures'
     # few-decimal data (D2's known boundary).  NaN samples excluded so
     # min/max stay comparable (both engines sort NaN above all values).
-    from tsdb_parquet_spark.datasource import BLOCK_DIR_DEFAULT, register
+    from tsdb_parquet_spark.datasource import register
 
     register(spark)
-    df = spark.read.format("tsdb").load(BLOCK_DIR_DEFAULT)
+    df = spark.read.format("tsdb").load(_fixture_block(spark))
     finite = F.when(~F.isnan("value"), F.col("value"))
     return (
         df.groupBy("label_name")
@@ -2923,46 +2885,27 @@ def q88_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-unit scaled for hash stability.  Scale: dedup state is one
     entry per key within the watermark horizon — the bounded-state
     streaming counterpart of exact_dedup (llm/dedup.py)."""
-    from tsdb_parquet_spark.streaming.windows import (
-        drain_available_now,
-        stream_dedup,
-    )
-    from tsdb_parquet_spark.tables import _normalize_ns_timestamps, table_path
+    from tsdb_parquet_spark.streaming.windows import stream_dedup
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = table_path(sf_dir, "events")
-    schema = spark.read.parquet(path).schema
-
-    def _stream() -> DataFrame:
-        reader = spark.readStream.schema(schema)
-        p = path
-        if not os.path.isdir(p):
-            reader = reader.option("pathGlobFilter", os.path.basename(p))
-            p = os.path.dirname(p)
-        return _normalize_ns_timestamps(reader.parquet(p))
-
-    doubled = _stream().union(_stream())
-    deduped = stream_dedup(doubled, keys=["event_id"]).select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.floor(F.col("value") * 10000 + F.lit(0.5))
-        .cast("long")
-        .alias("v_units"),
-    )
     name = "q88_mem_" + _sf_tag(sf_dir)
-    for q in spark.streams.active:  # re-entrant within one session
-        if q.name == name:
-            q.stop()
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain_available_now(q)
+    with bounded_replay(spark, name) as replay:
+        doubled = read_events_stream(
+            spark, path, max_files_per_trigger=None
+        ).union(read_events_stream(spark, path, max_files_per_trigger=None))
+        deduped = stream_dedup(doubled, keys=["event_id"]).select(
+            "event_id",
+            "user_id",
+            "event_type",
+            F.floor(F.col("value") * 10000 + F.lit(0.5))
+            .cast("long")
+            .alias("v_units"),
+        )
+        replay.run(
+            deduped.writeStream.format("memory").outputMode("append"),
+            drained=True,
+        )
     return spark.table(name).orderBy("event_id")
 
 
@@ -3213,31 +3156,17 @@ def q117_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Replayed availableNow into a memory sink; complete-mode output
     equals the plain batch join+aggregate oracle exactly."""
     from tsdb_parquet_spark.streaming.windows import stream_static_enrich
-    from tsdb_parquet_spark.tables import _normalize_ns_timestamps, table_path
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = table_path(sf_dir, "events")
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
-    if not os.path.isdir(path):
-        reader = reader.option("pathGlobFilter", os.path.basename(path))
-        path = os.path.dirname(path)
-    stream = _normalize_ns_timestamps(reader.parquet(path))
-    customer = _t(spark, sf_dir, "customer")
     name = "q117_mem_" + _sf_tag(sf_dir)
-    for q in spark.streams.active:  # re-entrant within one session
-        if q.name == name:
-            q.stop()
-    q = (
-        stream_static_enrich(stream, customer)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    with bounded_replay(spark, name) as replay:
+        stream = read_events_stream(
+            spark, table_path(sf_dir, "events"), max_files_per_trigger=None
+        )
+        replay.run(
+            stream_static_enrich(stream, _t(spark, sf_dir, "customer"))
+            .writeStream.format("memory").outputMode("complete")
+        )
     return spark.table(name).orderBy("c_mktsegment", "event_type")
 
 
@@ -3323,51 +3252,33 @@ def q121_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_manifest_view,
         upsert_latest_sink_manifest,
     )
-    from tsdb_parquet_spark.tables import load_table
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     tag = _sf_tag(sf_dir)
+    # the manifest view is read lazily after this returns, so its base
+    # lives outside the replay's run dir
     base = os.path.join(tempfile.gettempdir(), f"tsdb_spark_upsert_{tag}")
-    shutil.rmtree(base, ignore_errors=True)
-    # replay copy split into 3 files -> 3 micro-batches under
-    # maxFilesPerTrigger=1 (timestamps already normalized by load_table,
-    # so the streaming reader needs no ns handling)
-    split_dir = base + "__src"
-    load_table(spark, sf_dir, "events").repartition(3).write.mode(
-        "overwrite"
-    ).parquet(split_dir)
-    schema = spark.read.parquet(split_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split_dir)
-    )
-    name = f"q121_upsert_{tag}"
-    for q in spark.streams.active:  # re-entrant within one session
-        if q.name == name:
-            q.stop()
-    q = (
-        stream.writeStream.foreachBatch(
-            upsert_latest_sink_manifest(base, ["user_id"], "ts", "event_id")
+    with bounded_replay(spark, f"q121_upsert_{tag}") as replay:
+        shutil.rmtree(base, ignore_errors=True)
+        # replay copy split into 3 files -> 3 micro-batches under
+        # maxFilesPerTrigger=1
+        split_dir = os.path.join(replay.dir, "src")
+        load_table(spark, sf_dir, "events").repartition(3).write.parquet(
+            split_dir
         )
-        .queryName(name)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", base + "__chk")
-        .start()
-    )
-    q.awaitTermination(180)
-    n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
-    shutil.rmtree(base + "__chk", ignore_errors=True)
-    shutil.rmtree(split_dir, ignore_errors=True)
-    if n_batches < 3:
-        raise AssertionError(
-            f"q121 multi-batch gate: expected >=3 micro-batches, got {n_batches}"
+        stream = read_events_stream(spark, split_dir)
+        replay.run(
+            stream.writeStream.foreachBatch(
+                upsert_latest_sink_manifest(base, ["user_id"], "ts", "event_id")
+            ).option("checkpointLocation", os.path.join(replay.dir, "chk")),
+            min_batches=3,
         )
     # select() pins the oracle's column order (the multi-path manifest
     # scan has no partition column to drop, but dir listing order must
     # not leak into the schema)
-    cols = [f.name for f in schema.fields]
-    return read_manifest_view(spark, base).select(*cols).orderBy("user_id")
+    return read_manifest_view(spark, base).select(*stream.columns).orderBy(
+        "user_id"
+    )
 
 
 
@@ -3659,7 +3570,7 @@ def q134_length_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _heartbeat_event_stream(spark: SparkSession, sf_dir: str, tmp_prefix: str):
+def _heartbeat_event_stream(spark: SparkSession, sf_dir: str, hb_dir: str):
     """File-replay events stream with the watermark heartbeats UNIONED in
     from a 2-row SIDECAR directory (r16) instead of rewriting the whole
     events table into a temp copy first — the copy was ~10 s of setup
@@ -3669,30 +3580,13 @@ def _heartbeat_event_stream(spark: SparkSession, sf_dir: str, tmp_prefix: str):
     mechanism only needs the heartbeat rows to REACH the same watermark
     operators as the real rows; a union of two file-stream sources
     delivers exactly the same row set to the same plan, so the flush
-    semantics and the oracle result are unchanged.  Returns
-    (stream, tag)."""
-    import shutil
-    import tempfile
-
+    semantics and the oracle result are unchanged.  The sidecar is
+    written to ``hb_dir`` (inside the caller's replay run dir)."""
     from tsdb_parquet_spark.streaming.windows import append_heartbeat
-    from tsdb_parquet_spark.tables import _normalize_ns_timestamps, table_path
 
-    tag = _sf_tag(sf_dir)
-    path = table_path(sf_dir, "events")
-    raw_schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(raw_schema)
-    if not os.path.isdir(path):
-        reader = reader.option("pathGlobFilter", os.path.basename(path))
-        main_dir = os.path.dirname(path)
-    else:
-        main_dir = path
-    main = _normalize_ns_timestamps(reader.parquet(main_dir)).select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    hb_dir = os.path.join(
-        tempfile.gettempdir(), f"tsdb_spark_{tmp_prefix}_{tag}"
-    )
-    shutil.rmtree(hb_dir, ignore_errors=True)
+    main = read_events_stream(
+        spark, table_path(sf_dir, "events"), max_files_per_trigger=None
+    ).select("event_id", "ts", "user_id", "event_type")
     hb_ts = _t(spark, sf_dir, "events").agg(F.max("ts")).first()[0] + \
         __import__("datetime").timedelta(hours=2)
     for et in ("view", "click"):
@@ -3702,7 +3596,7 @@ def _heartbeat_event_stream(spark: SparkSession, sf_dir: str, tmp_prefix: str):
             main.schema,
         )
     hb = spark.readStream.schema(main.schema).parquet(hb_dir)
-    return main.unionByName(hb), tag
+    return main.unionByName(hb)
 
 
 def q135_streaming_outer_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3725,24 +3619,18 @@ def q135_streaming_outer_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
         without_heartbeats,
     )
 
-    stream, tag = _heartbeat_event_stream(spark, sf_dir, "hbflush")
-    name = f"q135_mem_{tag}"
-    for q in spark.streams.active:  # re-entrant within one session
-        if q.name == name:
-            q.stop()
-    q = (
-        stream_interval_join(
-            stream.filter(F.col("event_type") == "view"),
-            stream.filter(F.col("event_type") == "click"),
-            interval="10 minutes", watermark="30 minutes", how="left_outer",
+    name = "q135_mem_" + _sf_tag(sf_dir)
+    with bounded_replay(spark, name) as replay:
+        stream = _heartbeat_event_stream(
+            spark, sf_dir, os.path.join(replay.dir, "hb")
         )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+        replay.run(
+            stream_interval_join(
+                stream.filter(F.col("event_type") == "view"),
+                stream.filter(F.col("event_type") == "click"),
+                interval="10 minutes", watermark="30 minutes", how="left_outer",
+            ).writeStream.format("memory").outputMode("append")
+        )
     return (
         without_heartbeats(spark.table(name), "user_id", -1)
         .select("user_id", "l_event", "r_event")
@@ -3955,24 +3843,18 @@ def q138_streaming_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         without_heartbeats,
     )
 
-    stream, tag = _heartbeat_event_stream(spark, sf_dir, "fouter")
-    name = f"q138_mem_{tag}"
-    for q in spark.streams.active:  # re-entrant within one session
-        if q.name == name:
-            q.stop()
-    q = (
-        stream_interval_join(
-            stream.filter(F.col("event_type") == "view"),
-            stream.filter(F.col("event_type") == "click"),
-            interval="10 minutes", watermark="30 minutes", how="full_outer",
+    name = "q138_mem_" + _sf_tag(sf_dir)
+    with bounded_replay(spark, name) as replay:
+        stream = _heartbeat_event_stream(
+            spark, sf_dir, os.path.join(replay.dir, "hb")
         )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+        replay.run(
+            stream_interval_join(
+                stream.filter(F.col("event_type") == "view"),
+                stream.filter(F.col("event_type") == "click"),
+                interval="10 minutes", watermark="30 minutes", how="full_outer",
+            ).writeStream.format("memory").outputMode("append")
+        )
     return (
         without_heartbeats(spark.table(name), "user_id", -1)
         .select("user_id", "l_event", "r_event")
@@ -4729,22 +4611,10 @@ def q160_streaming_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame
     follow the q90 recipe (FileStreamSource schedules oldest mtime
     first under maxFilesPerTrigger=1)."""
     import datetime as _dt
-    import shutil
-    import tempfile
 
-    from tsdb_parquet_spark.streaming.windows import (
-        drain_available_now,
-        tumbling_counts,
-    )
-    from tsdb_parquet_spark.tables import load_table
+    from tsdb_parquet_spark.streaming.windows import tumbling_counts
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    tag = _sf_tag(sf_dir)
-    split_dir = os.path.join(
-        tempfile.gettempdir(), f"tsdb_spark_q160_{tag}__src"
-    )
-    shutil.rmtree(split_dir, ignore_errors=True)
-    os.makedirs(split_dir)
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type", "value")
     h0 = ev.agg(F.date_trunc("hour", F.min("ts")).alias("h")).first()["h"]
     early = ev.filter(
@@ -4766,37 +4636,16 @@ def q160_streaming_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame
         (F.col("ts") >= F.lit(h0 + _dt.timedelta(hours=6)))
         & (F.col("ts") < F.lit(h0 + _dt.timedelta(hours=6, minutes=30)))
     )
-    for i, sl in enumerate([early, ahead, buffer, early]):
-        tmp = f"{split_dir}__tmp{i}"
-        sl.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        dst = os.path.join(split_dir, f"slice{i}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.utime(dst, (1_000_000_000 + i * 60, 1_000_000_000 + i * 60))
-    schema = spark.read.parquet(split_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split_dir)
-    )
-    name = "q160_mem_" + tag
-    for q in spark.streams.active:  # re-entrant within one session
-        if q.name == name:
-            q.stop()
-    q = (
-        tumbling_counts(stream, watermark="90 minutes")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain_available_now(q)
-    n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
-    if n_batches < 4:
-        raise AssertionError(
-            f"q160 gate: expected >=4 micro-batches, got {n_batches}"
+    name = "q160_mem_" + _sf_tag(sf_dir)
+    with bounded_replay(spark, name) as replay:
+        split_dir = os.path.join(replay.dir, "src")
+        _write_replay_slices(split_dir, [early, ahead, buffer, early])
+        # drained: the result is defined as the sink table at drain
+        replay.run(
+            tumbling_counts(
+                read_events_stream(spark, split_dir), watermark="90 minutes"
+            ).writeStream.format("memory").outputMode("append"),
+            drained=True, min_batches=4,
         )
     return spark.table(name).orderBy("bucket_start", "event_type")
 
@@ -5182,6 +5031,43 @@ def q171_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combining hash aggregate (one narrow exchange, one row per
     doc).  Same rows, same oracle; plan-asserted single evaluation with
     zero disk materialization (tests/test_plans.py)."""
+    return _curate(spark, sf_dir, near_dup=False)
+
+
+def q172_curation_with_neardup(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """q171's curation pipeline with the NEAR-dup stage a production
+    run adds between exact dedup and quality filtering (r12): portable
+    MinHash-LSH pairs (q162 family — md5 shingles, 32 inlined affine
+    mixes, 8 md5 band keys, exact Jaccard >= 0.8 rerank) over the
+    exact-deduped corpus, resolved by the KEEP-FIRST policy — a doc
+    drops iff it near-dups some SMALLER surviving doc_id (pairwise, not
+    transitive closure: the greedy id-order rule, documented; q78's
+    connected-components is the closure alternative when clusters
+    chain).  Then the same quality gate -> 8-gram decontamination ->
+    fingerprint-keyed split.  The DuckDB oracle replays ALL FIVE
+    stages, near-dup banding included — the deepest single-query
+    integration the contract gates.
+
+    Scale (r13, verdict r12 #5): the near-dup stage is served from the
+    AT-REST portable band index (incremental.ensure_band_index_portable
+    over the deduped corpus — the q146c layout reused within-corpus):
+    candidate pairs come from the index SELF-JOINED on its own
+    band_key buckets (no exchange after the one amortized index-build
+    shuffle, which itself moves (id, band_key) rows only — the old
+    inline path re-banded the corpus per run AND carried full shingle
+    arrays through the O(n·bands) exchange); the exact-Jaccard rerank
+    touches candidate pairs only.  Pair semantics are identical
+    (pytest: near_dup_pairs_from_band_index == minhash_lsh_portable)."""
+    return _curate(spark, sf_dir, near_dup=True)
+
+
+def _curate(spark: SparkSession, sf_dir: str, near_dup: bool) -> DataFrame:
+    """The curation chain of q171 (``near_dup=False``) and q172
+    (``near_dup=True``): fingerprint dedup -> [near-dup keep-first off
+    the at-rest band index] -> quality gate -> single-pass 8-gram
+    decontamination -> fingerprint-keyed split."""
     from tsdb_parquet_spark.llm.corpus import _exploded_ngrams, word_ngrams_from
     from tsdb_parquet_spark.llm.text import fingerprint_col, tokens_col
 
@@ -5203,11 +5089,33 @@ def q171_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         fp.groupBy("fingerprint").agg(keep.alias("_r"))
         .select("fingerprint", "_r.*")
     )
+    kept = dedup
+    if near_dup:
+        from tsdb_parquet_spark.llm.incremental import (
+            ensure_band_index_portable,
+            near_dup_pairs_from_band_index,
+        )
+
+        idx = ensure_band_index_portable(
+            spark, f"q172dedup_{_sf_tag(sf_dir)}", lambda: dedup,
+            source_paths=table_path(sf_dir, "documents"),
+        )
+        # r15 OPTIMIZATION: the rerank's shingle source is the RAW corpus
+        # scan, not the dedup aggregate — candidate ids are survivors, and
+        # a survivor's text is identical in the raw table (the fingerprint
+        # IS the text hash), so the pair set is unchanged while the dedup
+        # subtree (scan + fingerprint exchange + min_by final agg) is no
+        # longer re-evaluated for each rerank side.
+        pairs = near_dup_pairs_from_band_index(idx, corpus, threshold=0.8)
+        kept = dedup.join(
+            pairs.select(F.col("id_b").alias("doc_id")).distinct(),
+            "doc_id", "left_anti",
+        )
     toks = F.filter(
         F.split("text", "[ \\t\\n\\r\\f]+"), lambda w: w != ""
     )
     quality = (
-        dedup.withColumn("n_tok", F.size(toks).cast("bigint"))
+        kept.withColumn("n_tok", F.size(toks).cast("bigint"))
         .withColumn(
             "_sl",
             F.aggregate(toks, F.lit(0), lambda a, w: a + F.length(w)),
@@ -5268,133 +5176,6 @@ def q171_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return clean.select(
         "doc_id", "source", "n_tok", split.alias("split")
     ).orderBy("doc_id")
-
-
-
-def q172_curation_with_neardup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """q171's curation pipeline with the NEAR-dup stage a production
-    run adds between exact dedup and quality filtering (r12): portable
-    MinHash-LSH pairs (q162 family — md5 shingles, 32 inlined affine
-    mixes, 8 md5 band keys, exact Jaccard >= 0.8 rerank) over the
-    exact-deduped corpus, resolved by the KEEP-FIRST policy — a doc
-    drops iff it near-dups some SMALLER surviving doc_id (pairwise, not
-    transitive closure: the greedy id-order rule, documented; q78's
-    connected-components is the closure alternative when clusters
-    chain).  Then the same quality gate -> 8-gram decontamination ->
-    fingerprint-keyed split.  The DuckDB oracle replays ALL FIVE
-    stages, near-dup banding included — the deepest single-query
-    integration the contract gates.
-
-    Scale (r13, verdict r12 #5): the near-dup stage is served from the
-    AT-REST portable band index (incremental.ensure_band_index_portable
-    over the deduped corpus — the q146c layout reused within-corpus):
-    candidate pairs come from the index SELF-JOINED on its own
-    band_key buckets (no exchange after the one amortized index-build
-    shuffle, which itself moves (id, band_key) rows only — the old
-    inline path re-banded the corpus per run AND carried full shingle
-    arrays through the O(n·bands) exchange); the exact-Jaccard rerank
-    touches candidate pairs only.  Pair semantics are identical
-    (pytest: near_dup_pairs_from_band_index == minhash_lsh_portable)."""
-    from tsdb_parquet_spark.llm.corpus import _exploded_ngrams, word_ngrams_from
-    from tsdb_parquet_spark.llm.incremental import (
-        ensure_band_index_portable,
-        near_dup_pairs_from_band_index,
-    )
-    from tsdb_parquet_spark.llm.text import fingerprint_col, tokens_col
-
-    docs = _t(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 20 == 0)
-    corpus = docs.filter(F.col("doc_id") % 20 != 0)
-    # r16: spread the fingerprint map (see q171 — same r13 lesson;
-    # sf10 A/B: dedup stage 4.4 s -> 1.6 s, digests equal)
-    fp = (
-        corpus.select("doc_id", "source", "text")
-        .repartition(F.col("doc_id"))
-        .withColumn("fingerprint", fingerprint_col("text"))
-    )
-    keep = F.min_by(F.struct("doc_id", "source", "text"), F.col("doc_id"))
-    dedup = (
-        fp.groupBy("fingerprint").agg(keep.alias("_r"))
-        .select("fingerprint", "_r.*")
-    )
-    tag = _sf_tag(sf_dir)
-    idx = ensure_band_index_portable(
-        spark, f"q172dedup_{tag}", lambda: dedup,
-        source_paths=table_path(sf_dir, "documents"),
-    )
-    # r15 OPTIMIZATION: the rerank's shingle source is the RAW corpus
-    # scan, not the dedup aggregate — candidate ids are survivors, and a
-    # survivor's text is identical in the raw table (the fingerprint IS
-    # the text hash), so the pair set is unchanged while the dedup
-    # subtree (scan + fingerprint exchange + min_by final agg) is no
-    # longer re-evaluated for each rerank side.
-    pairs = near_dup_pairs_from_band_index(
-        idx, corpus, threshold=0.8,
-    )
-    near = dedup.join(
-        pairs.select(F.col("id_b").alias("doc_id")).distinct(),
-        "doc_id", "left_anti",
-    )
-    toks = F.filter(
-        F.split("text", "[ \\t\\n\\r\\f]+"), lambda w: w != ""
-    )
-    quality = (
-        near.withColumn("n_tok", F.size(toks).cast("bigint"))
-        .withColumn(
-            "_sl",
-            F.aggregate(toks, F.lit(0), lambda a, w: a + F.length(w)),
-        )
-        .filter(
-            (F.col("n_tok") >= 20)
-            & (F.col("_sl") <= F.lit(15) * F.col("n_tok"))
-        )
-    )
-    # r15 OPTIMIZATION: single-pass decontamination (the q171 shape) —
-    # the quality subtree was referenced on BOTH sides of decontaminate's
-    # n-hits join-back (scan + fingerprint exchange + anti join evaluated
-    # twice); the narrow payload now rides through the n-gram explode +
-    # broadcast hit-mark join into one combining hash aggregate.  Same
-    # rows (survive iff zero distinct-8-gram benchmark hits), same oracle.
-    # r16: the benchmark-side explode spreads too (same r13 lesson)
-    _n_part = shuffle_partitions(spark)
-    bench_ngrams = _exploded_ngrams(
-        bench.select("text").repartition(_n_part), [], "text", 8
-    ).distinct()
-    staged = quality.select(
-        "doc_id", "source", "n_tok", "fingerprint",
-        tokens_col("text").alias("_toks"),
-    )
-    exploded = staged.select(
-        "doc_id", "source", "n_tok", "fingerprint",
-        F.explode_outer(
-            F.array_distinct(word_ngrams_from(F.col("_toks"), 8))
-        ).alias("_ng"),
-    )
-    marked = exploded.join(
-        F.broadcast(bench_ngrams.withColumn("_hit", F.lit(1))),
-        "_ng", "left",
-    )
-    clean = (
-        marked.groupBy("doc_id", "source", "n_tok", "fingerprint")
-        .agg(F.max("_hit").alias("_c"))
-        .filter(F.col("_c").isNull())
-    )
-    split = (
-        F.when(
-            F.substring(
-                F.md5(F.concat(F.col("fingerprint").cast("string"),
-                               F.lit("v1"))),
-                1, 8,
-            ) < "0ccccccc",
-            "val",
-        ).otherwise("train")
-    )
-    return clean.select(
-        "doc_id", "source", "n_tok", split.alias("split")
-    ).orderBy("doc_id")
-
 
 
 def q173_manifest_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -195,3 +195,38 @@ def test_filter_pushdown_is_null_presence(spark, synthetic_block):
     assert [r["label_name"] for r in present.collect()] == ["rpc_duration_seconds"]
     absent = scan.filter(F.col("label_instance").isNull()).select("label_name").distinct()
     assert [r["label_name"] for r in absent.collect()] == ["build_info"]
+
+
+def test_no_string_constant_names_an_absolute_path():
+    """Every default resolves inside the checkout: outside the driver
+    contract's ``entry()`` (which names the driver's own test data), no
+    non-docstring string constant in the package or the entry module
+    holds an absolute filesystem path."""
+    import ast
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    files = [*sorted((root / "tsdb_parquet_spark").rglob("*.py")),
+             root / "__spark_entry__.py"]
+    scoped = (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    path_re = re.compile(r"(?<![\w.:/~])/[A-Za-z_][\w.-]*/[\w.-]+")
+    hits = []
+    for f in files:
+        tree = ast.parse(f.read_text())
+        skip = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and node.name == "entry" \
+                    and f.name == "__spark_entry__.py":
+                skip |= {id(n) for n in ast.walk(node)}
+            if isinstance(node, scoped) and node.body \
+                    and isinstance(node.body[0], ast.Expr) \
+                    and isinstance(node.body[0].value, ast.Constant):
+                skip.add(id(node.body[0].value))  # docstring
+        hits += [
+            f"{f.name}:{n.lineno} {path_re.search(n.value).group(0)}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Constant) and isinstance(n.value, str)
+            and id(n) not in skip and path_re.search(n.value)
+        ]
+    assert not hits, hits

@@ -1587,6 +1587,45 @@ def test_near_dup_pairs_from_band_index_matches_inline(spark, tmp_path):
     assert "FlatMapCoGroupsInArrow" in final, final
 
 
+def test_near_dup_pairs_missing_doc_drops_for_int_and_string_ids(
+    spark, tmp_path
+):
+    """A candidate pair whose doc is missing from ``docs`` (a band index
+    built over more docs than the rerank sees) drops the pair — for
+    integer ids (the cogrouped kernel) exactly as for string ids (the
+    join fallback)."""
+    from tsdb_parquet_spark.llm.incremental import (
+        ensure_band_index_portable,
+        near_dup_pairs_from_band_index,
+    )
+
+    rows = []
+    for i in range(20):
+        t = (f"the quick brown fox number {i} jumps over the lazy dog "
+             f"while reciting paragraph {i} of the corpus charter")
+        rows.append((i, t))
+        if i % 4 == 0:  # near-dup: one appended token
+            rows.append((100 + i, t + " tail"))
+    got = {}
+    for kind in ("bigint", "string"):
+        corpus = spark.createDataFrame(rows, "doc_id long, text string")
+        corpus = corpus.withColumn("doc_id", corpus["doc_id"].cast(kind))
+        src = str(tmp_path / f"ndmiss_{kind}.parquet")
+        corpus.write.parquet(src)
+        idx = ensure_band_index_portable(
+            spark, f"ndmiss_{kind}", lambda: spark.read.parquet(src),
+            num_buckets=8, source_paths=src,
+        )
+        docs = spark.read.parquet(src).filter("CAST(doc_id AS BIGINT) != 104")
+        got[kind] = {
+            (frozenset((int(r["id_a"]), int(r["id_b"]))), r["jaccard"])
+            for r in near_dup_pairs_from_band_index(idx, docs).collect()
+        }
+    assert got["bigint"] == got["string"]
+    pairs = {p for p, _ in got["bigint"]}
+    assert frozenset((4, 104)) not in pairs and len(pairs) >= 4
+
+
 def test_incremental_band_param_guards(spark):
     """Indivisible num_hashes/bands must raise (not silently drop
     trailing signature slots), and the index name carries the

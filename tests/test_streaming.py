@@ -413,3 +413,81 @@ def test_heartbeat_flushes_withheld_outer_join_tail(spark, tmp_path):
     # same checkpoint -> continuation: the withheld tail flushes, the
     # heartbeats never appear
     assert run() == [(100, 101), (102, None), (103, None), (104, None)]
+
+
+def _totals_writer(spark, events_path):
+    # per-key state with a 5-minute processing-time timeout: after the
+    # data drains the query keeps scheduling state-cleanup batches, so
+    # it never self-terminates inside a test's time
+    from tsdb_parquet_spark.streaming.stateful import running_totals
+
+    return (
+        running_totals(read_events_stream(spark, events_path),
+                       key_col="user_id", value_col="value")
+        .writeStream.format("memory").outputMode("update")
+    )
+
+
+def test_bounded_replay_timeout_raises_stops_and_cleans(
+    spark, events_path, monkeypatch
+):
+    # an awaited replay that cannot terminate must fail at the deadline:
+    # the query stopped, TimeoutError raised, the run dir removed — never
+    # a partial sink returned as the answer
+    import os
+
+    from tsdb_parquet_spark.streaming import windows
+
+    monkeypatch.setattr(windows, "REPLAY_TIMEOUT_S", 3.0)
+    name = "replay_timeout_t"
+    with pytest.raises(TimeoutError):
+        with windows.bounded_replay(spark, name) as replay:
+            run_dir = replay.dir
+            assert os.path.isdir(run_dir)
+            replay.run(_totals_writer(spark, events_path))
+    assert not any(q.name == name for q in spark.streams.active)
+    assert not os.path.exists(run_dir)
+
+
+def test_drain_available_now_raises_at_deadline(spark, events_path):
+    from tsdb_parquet_spark.streaming import drain_available_now
+
+    q = (_totals_writer(spark, events_path).queryName("drain_deadline_t")
+         .trigger(availableNow=True).start())
+    try:
+        with pytest.raises(TimeoutError):
+            drain_available_now(q, timeout=0.0)
+        assert not q.isActive
+    finally:
+        q.stop()
+
+
+def test_q86_entry_reentrant_in_one_session(spark):
+    # a second run of the same named replay stops nothing live, gets a
+    # fresh run dir and replaces the memory table with equal rows
+    import __spark_entry__ as entry
+
+    sf = "/root/testdata/sf0.001"
+    first = sorted(entry.q86_streaming_stateful_totals(spark, sf).collect())
+    second = sorted(entry.q86_streaming_stateful_totals(spark, sf).collect())
+    assert first and first == second
+
+
+def test_append_heartbeat_rejects_non_atomic_fields(spark, tmp_path):
+    from pyspark.sql.types import (
+        ArrayType,
+        StringType,
+        StructField,
+        StructType,
+        TimestampType,
+    )
+
+    from tsdb_parquet_spark.streaming.windows import append_heartbeat
+
+    schema = StructType([
+        StructField("ts", TimestampType()),
+        StructField("tags", ArrayType(StringType())),
+    ])
+    with pytest.raises(TypeError, match="'tags'"):
+        append_heartbeat(spark, str(tmp_path / "hb"), {"ts": None}, schema)
+    assert not (tmp_path / "hb").exists()

@@ -52,9 +52,6 @@ from .tsdb_block import block_to_arrow, read_index, wide_columns, wide_ddl
 
 FORMAT_NAME = "tsdb"
 
-# the reference's committed block (767 series / 154,529 samples)
-BLOCK_DIR_DEFAULT = "/root/reference/01GW1T7K3E9F9R361GDPVH8NZF"
-
 
 def _block_dirs(path: str) -> list[str]:
     """``path`` is either one block dir (contains ``index``) or a directory

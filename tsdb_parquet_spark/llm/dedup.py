@@ -315,7 +315,8 @@ def _pair_jaccard_int64_grouped(
     values in [0, 2^31), asserted; per-row distinctness a caller
     obligation), plus: ``id_col`` must be an integer column (the
     group-local doc lookup is ``np.searchsorted``).  Null shingle
-    arrays yield null counts → null jaccard → dropped, as before.
+    arrays yield null counts → null jaccard → dropped, as before; a
+    pair whose id has no shingle row drops too, like the join form.
     ``cand`` is evaluated twice (group keys + doc demand) — measured
     a wash to persist, and both evaluations are narrow."""
     spark = cand.sparkSession
@@ -346,14 +347,30 @@ def _pair_jaccard_int64_grouped(
 
         ida = left.column(0).combine_chunks()
         idb = left.column(1).combine_chunks()
-        npairs = left.num_rows
+        ids_r = right.column(0).to_numpy(zero_copy_only=False)
+        order = np.argsort(ids_r, kind="stable")
+        sid = ids_r[order]
+        ia_all = ida.to_numpy(zero_copy_only=False)
+        ib_all = idb.to_numpy(zero_copy_only=False)
+
+        def present(q):
+            if not sid.size:
+                return np.zeros(q.size, bool)
+            return sid[np.minimum(np.searchsorted(sid, q), sid.size - 1)] == q
+
+        # a pair whose doc has no shingle row drops (the join form's
+        # inner-join semantics)
+        found = present(ia_all) & present(ib_all)
+        if not found.all():
+            ida, idb = ida.filter(pa.array(found)), idb.filter(pa.array(found))
+            ia_all, ib_all = ia_all[found], ib_all[found]
+        npairs = len(ida)
         if npairs == 0:
             return pa.table(
                 [ida, idb,
                  pa.array([], pa.int32()), pa.array([], pa.int32()),
                  pa.array([], pa.int32())],
                 names=["id_a", "id_b", "_inter", "_sa", "_sb"])
-        ids_r = right.column(0).to_numpy(zero_copy_only=False)
         shc = right.column(1).combine_chunks()
         off = shc.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
         starts = off[:-1] - off[0]
@@ -367,17 +384,9 @@ def _pair_jaccard_int64_grouped(
             v = np.where(np.repeat(valid_r, lens), v, 0)
         if v.size and (v.min() < 0 or v.max() >= (1 << 31)):
             raise ValueError("shingle hash outside [0, 2^31)")
-        order = np.argsort(ids_r, kind="stable")
-        sid = ids_r[order]
-        ia_all = ida.to_numpy(zero_copy_only=False)
-        ib_all = idb.to_numpy(zero_copy_only=False)
 
         def lookup(q):
-            p = np.searchsorted(sid, q)
-            if p.size and (p.max() >= sid.size
-                           or not (sid[np.minimum(p, sid.size - 1)] == q).all()):
-                raise ValueError("pair id missing from shingle side")
-            return order[p]
+            return order[np.searchsorted(sid, q)]
 
         def gather(docidx, chunk_n):
             # per-pair flattened (row << 31 | value) keys via grouped

@@ -395,7 +395,11 @@ def near_dup_pairs_from_band_index(
     Pair semantics identical to minhash_lsh_portable (band keys fold
     the band index into the digest, so cross-band collisions need an
     md5 collision): returns (id_a, id_b, jaccard), id_a < id_b,
-    jaccard >= threshold at 6dp."""
+    jaccard >= threshold at 6dp.
+
+    Missing docs: a candidate pair whose id has no row in ``docs`` (an
+    index built over more docs than ``docs`` holds) is dropped, for
+    every id type — as ``ngram_jaccard_pairs`` drops it."""
     from pyspark.sql import Window
 
     from .dedup import portable_shingle_hashes

@@ -6,6 +6,7 @@ never read by ``hello.go``, and FrostDB's WAL option is commented out at
 
 from .stateful import running_totals, streaming_counter_rate
 from .windows import (
+    bounded_replay,
     drain_available_now,
     read_events_stream,
     session_counts,
@@ -20,6 +21,7 @@ from .windows import (
 
 __all__ = [
     "running_totals",
+    "bounded_replay",
     "drain_available_now",
     "streaming_counter_rate",
     "read_events_stream",

@@ -17,15 +17,27 @@ per-key sessions — the skew risk is a hot key, same as the batch window
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.aggregates import decimal_sum
 
 
-def drain_available_now(query, timeout: float = 120.0, poll: float = 0.2) -> None:
+# The one deadline of a bounded replay: a streaming gate that neither
+# terminates nor drains inside it fails instead of returning a partial
+# sink (180 s, the longest wait any gate has needed).
+REPLAY_TIMEOUT_S = 180.0
+
+
+def drain_available_now(
+    query, timeout: float = REPLAY_TIMEOUT_S, poll: float = 0.2
+) -> None:
     """Wait until an ``availableNow`` query has processed every file that
-    existed at start, then stop it if it hasn't stopped itself.
+    existed at start, then stop it if it hasn't stopped itself.  Raises
+    ``TimeoutError`` (after stopping the query) if the replay is not
+    drained within ``timeout`` seconds.
 
     Why not just ``awaitTermination``: a stateful query with a
     processing-time timeout (``applyInPandasWithState`` eviction) never
@@ -70,7 +82,12 @@ def drain_available_now(query, timeout: float = 120.0, poll: float = 0.2) -> Non
 
     deadline = _time.time() + timeout
     confirmed = 0
-    while _time.time() < deadline and query.isActive:
+    while query.isActive:
+        if _time.time() >= deadline:
+            query.stop()
+            raise TimeoutError(
+                f"streaming query {query.name!r} not drained in {timeout} s"
+            )
         lp = query.lastProgress
         if lp is not None and _offsets_drained(lp):
             break
@@ -86,21 +103,98 @@ def drain_available_now(query, timeout: float = 120.0, poll: float = 0.2) -> Non
     query.awaitTermination(30)
 
 
+class bounded_replay:
+    """One bounded availableNow replay of the streaming query ``name`` —
+    the harness every streaming gate runs through::
+
+        with bounded_replay(spark, name) as replay:
+            stream = read_events_stream(spark, path, max_files_per_trigger=None)
+            replay.run(tumbling_counts(stream).writeStream.format("memory")
+                       .outputMode("complete"))
+        result = spark.table(name)
+
+    On enter it stops any active query named ``name`` (a re-run in the
+    same session) before any directory is touched, then makes a fresh
+    per-run directory ``replay.dir`` for split copies, sidecar sources
+    and checkpoints.  On exit it stops the query again and removes that
+    directory.  Memory-sink tables live in the session, not in the
+    directory, so they outlive the replay.
+
+    Fails loud: a replay that neither terminates nor drains within
+    ``REPLAY_TIMEOUT_S`` is stopped and raises ``TimeoutError``, and one
+    that ran fewer than ``min_batches`` non-empty micro-batches raises
+    ``AssertionError`` — a loaded box never returns a partial sink as
+    the answer."""
+
+    def __init__(self, spark: SparkSession, name: str):
+        self.spark, self.name = spark, name
+
+    def __enter__(self) -> "bounded_replay":
+        import tempfile
+
+        self._stop()
+        self.dir = tempfile.mkdtemp(prefix=f"tsdb_spark_{self.name}_")
+        return self
+
+    def __exit__(self, *exc) -> None:
+        import shutil
+
+        self._stop()
+        shutil.rmtree(self.dir, ignore_errors=True)
+
+    def _stop(self) -> None:
+        for q in self.spark.streams.active:
+            if q.name == self.name:
+                q.stop()
+
+    def run(self, writer, *, drained: bool = False, min_batches: int = 1):
+        """Start ``writer`` (a ``DataStreamWriter`` with sink and output
+        mode, no name or trigger) as this replay's query and wait for
+        it: with :func:`drain_available_now` when ``drained`` (state with
+        a timeout never self-terminates), else with ``awaitTermination``."""
+        q = writer.queryName(self.name).trigger(availableNow=True).start()
+        if drained:
+            drain_available_now(q, REPLAY_TIMEOUT_S)
+        elif not q.awaitTermination(REPLAY_TIMEOUT_S):
+            q.stop()
+            raise TimeoutError(
+                f"streaming replay {self.name!r} not done in {REPLAY_TIMEOUT_S} s"
+            )
+        n = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+        if n < min_batches:
+            raise AssertionError(
+                f"streaming replay {self.name!r}: expected >= {min_batches} "
+                f"non-empty micro-batches, got {n}"
+            )
+
+
 def read_events_stream(
     spark: SparkSession,
     path: str,
     schema=None,
-    max_files_per_trigger: int = 1,
+    max_files_per_trigger: int | None = 1,
 ) -> DataFrame:
-    """File-source stream over a parquet directory/file — the replay source
-    for batch↔stream equivalence tests.  A schema is required by streaming
-    file sources; infer it from a batch peek when not supplied."""
+    """File-source stream over a parquet directory or single file — the
+    replay source of the streaming gates and the batch↔stream
+    equivalence tests.  A schema is required by streaming file sources;
+    it is read from the files when not supplied.  The file source wants
+    a directory, so a single-file table is selected out of its parent
+    with a name glob.  A TIMESTAMP(NANOS) ``ts`` arrives as a µs
+    timestamp, as in ``tables.load_table``.  ``max_files_per_trigger=None``
+    sets no per-trigger limit: the whole replay is one micro-batch."""
+    from ..tables import _normalize_ns_timestamps
+
+    # without nanosAsLong a TIMESTAMP(NANOS) column is unreadable (the
+    # load_table rationale: the session may have been built elsewhere)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = schema or spark.read.parquet(path).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    if not os.path.isdir(path):
+        reader = reader.option("pathGlobFilter", os.path.basename(path))
+        path = os.path.dirname(path)
+    return _normalize_ns_timestamps(reader.parquet(path))
 
 
 def tumbling_counts(
@@ -401,7 +495,16 @@ def append_heartbeat(
     key precludes; only REPEATED heartbeats (a later one flushing an
     earlier one as unmatched) can surface sentinel rows.
     """
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
     schema = schema or spark.read.parquet(src_dir).schema
+    for f in schema.fields:
+        # the literal projection below casts one scalar per field
+        if isinstance(f.dataType, (ArrayType, MapType, StructType)):
+            raise TypeError(
+                f"append_heartbeat: field {f.name!r} is "
+                f"{f.dataType.simpleString()}; only atomic types are supported"
+            )
     # r16: build the one row as a JVM literal projection over range(1)
     # instead of createDataFrame([...]).coalesce(1) — the Arrow local
     # relation parallelizes into defaultParallelism slices and the
