@@ -3246,8 +3246,8 @@ def q121_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the rename-swap sink, which remains the rename-capable-FS path
     with its own pytest suite (tests/test_r8_ops.py)."""
     import shutil
-    import tempfile
 
+    from tsdb_parquet_spark.sources import _warehouse_dir
     from tsdb_parquet_spark.streaming.commitlog import (
         read_manifest_view,
         upsert_latest_sink_manifest,
@@ -3256,8 +3256,9 @@ def q121_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     tag = _sf_tag(sf_dir)
     # the manifest view is read lazily after this returns, so its base
-    # lives outside the replay's run dir
-    base = os.path.join(tempfile.gettempdir(), f"tsdb_spark_upsert_{tag}")
+    # lives outside the replay's run dir: under this checkout's warehouse,
+    # so two checkouts can gate the same scale at once
+    base = os.path.join(_warehouse_dir(spark), f"tsdb_spark_upsert_{tag}")
     with bounded_replay(spark, f"q121_upsert_{tag}") as replay:
         shutil.rmtree(base, ignore_errors=True)
         # replay copy split into 3 files -> 3 micro-batches under
@@ -4590,8 +4591,9 @@ def q160_streaming_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame
     """The WATERMARK LATE-DATA POLICY under the correctness gate (new
     late-r11 — the last streaming semantic that was pytest-only): a
     FOUR-file replay — file 1 holds the corpus's first two hours,
-    file 2 jumps four hours ahead, file 3 is a small [H6, H6:30)
-    buffer batch, and file 4 REPLAYS file 1's rows verbatim — every
+    file 2 jumps four hours ahead, file 3 is a one-row buffer batch
+    (one file-1 row re-stamped H6:15, so it exists at every scale),
+    and file 4 REPLAYS file 1's rows verbatim — every
     one of them late beyond the 90-minute watermark by then.  The
     buffer batch exists because the watermark LAGS ONE BATCH (measured
     here: in a 3-file replay the late duplicates sailed through —
@@ -4603,7 +4605,7 @@ def q160_streaming_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame
     GROUP BY over the early two hours COUNTED ONCE — had the drop not
     happened, every n would double and the hash would fail.  The
     file-2 and buffer windows stay open at drain (append finality,
-    ends > wm: the buffer tops out before H6:30 so wm stays strictly
+    ends > wm: the buffer row at H6:15 leaves wm at H4:45, strictly
     under H5) and never reach the sink — Spark's documented
     semantics, now driver-hash-proven.  90 min (not a whole hour)
     keeps the watermark strictly between window boundaries so
@@ -4631,10 +4633,9 @@ def q160_streaming_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame
     # late duplicates through because file 2's 4-hour jump was not yet
     # the operator's watermark when file 3 ran.  The buffer batch
     # absorbs the lag so the late file REALLY runs under the advanced
-    # watermark; its own rows sit in open windows and never emit.
-    buffer = ev.filter(
-        (F.col("ts") >= F.lit(h0 + _dt.timedelta(hours=6)))
-        & (F.col("ts") < F.lit(h0 + _dt.timedelta(hours=6, minutes=30)))
+    # watermark; its one row sits in an open window and never emits.
+    buffer = early.limit(1).withColumn(
+        "ts", F.lit(h0 + _dt.timedelta(hours=6, minutes=15))
     )
     name = "q160_mem_" + _sf_tag(sf_dir)
     with bounded_replay(spark, name) as replay:
@@ -5190,15 +5191,15 @@ def q173_manifest_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Batch mode keeps the gate deterministic and cheap; q121 gates the
     same sink under real streaming replay."""
     import shutil
-    import tempfile
 
+    from tsdb_parquet_spark.sources import _warehouse_dir
     from tsdb_parquet_spark.streaming.commitlog import (
         read_manifest_view,
         upsert_latest_sink_manifest,
     )
 
     tag = _sf_tag(sf_dir)
-    base = os.path.join(tempfile.gettempdir(), f"tsdb_spark_tt_{tag}")
+    base = os.path.join(_warehouse_dir(spark), f"tsdb_spark_tt_{tag}")
     shutil.rmtree(base, ignore_errors=True)
     events = _t(spark, sf_dir, "events")
     sink = upsert_latest_sink_manifest(base, ["user_id"], "ts", "event_id")

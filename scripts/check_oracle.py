@@ -96,6 +96,7 @@ def digest(cols: list[str], rows: list[tuple]) -> str:
 
 
 def main() -> None:
+    t_start = time.time()
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and "/" in sys.argv[1] else "/root/testdata/sf0.01"
     only = set(a for a in sys.argv[1:] if "/" not in a)
 
@@ -159,7 +160,8 @@ def main() -> None:
             print(f"PASS  {name}: rows={len(srows)} ({time.time()-t0:.1f}s)")
             n_pass += 1
 
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
+    print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only "
+          f"in {time.time() - t_start:.1f} s")
     sys.exit(1 if n_fail else 0)
 
 

@@ -48,7 +48,12 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from .pyworker import install as _install_pyworker
 from .tsdb_block import block_to_arrow, read_index, wide_columns, wide_ddl
+
+# Planner workers always start from pyspark.daemon; patch their zip re-read
+# here, when the first unpickled source imports this module (pyworker.py).
+_install_pyworker()
 
 FORMAT_NAME = "tsdb"
 

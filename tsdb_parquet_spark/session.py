@@ -38,6 +38,12 @@ def get_spark(
     In local mode the driver is the only JVM; ``spark.driver.memory`` is the
     one memory knob. On a cluster, executor sizing is deployment config and
     deliberately not baked in here.
+
+    Executor Python workers are forked from ``tsdb_parquet_spark.pyworker``
+    (``spark.python.daemon.module``), which stops every worker call from
+    re-reading the pyspark.zip directory (~0.1-0.2 s a call before Python
+    3.13). So executors must be able to import ``tsdb_parquet_spark``, as
+    ``format("tsdb")`` reads already require.
     """
     cores = _local_cores()
     builder = (
@@ -80,6 +86,12 @@ def get_spark(
         # off).  Regular 4 KB pages cost a few percent of TLB efficiency;
         # the first-touch compaction storm costs orders of magnitude.
         .config("spark.executorEnv.NUMPY_MADVISE_HUGEPAGE", "0")
+        # Every worker call ends in importlib.invalidate_caches(), which
+        # before Python 3.13 re-parses the whole directory of pyspark.zip
+        # under each of its 16 zipimporters: 108-230 ms a call, more than
+        # most kernels run.  This daemon patches that re-read to happen only
+        # when an archive changed, before it forks any worker (pyworker.py).
+        .config("spark.python.daemon.module", "tsdb_parquet_spark.pyworker")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Scan-split sizing is BYTE-based on COMPRESSED file size, and
         # Spark floors the split at openCostInBytes (4 MB default, an
