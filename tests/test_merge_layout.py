@@ -211,6 +211,8 @@ def test_label_schema_evolution_reads_merged_with_prom_null_matchers(spark, tmp_
     )
     df = load_tsdb(spark, d)
     assert "label_zone" in df.columns
+    # the pinned footer union is exactly the schema Spark's merge infers
+    assert df.schema == spark.read.option("mergeSchema", "true").parquet(d).schema
 
     eq = [r.time for r in select_series(
         df, [Matcher("=", "zone", "eu-1")],
@@ -225,3 +227,49 @@ def test_label_schema_evolution_reads_merged_with_prom_null_matchers(spark, tmp_
         df, [Matcher("!=", "zone", "eu-1")],
         null_semantics="prometheus").collect()]
     assert neq == [1000]
+
+
+def test_compaction_keeps_labels_added_by_an_appended_file(spark, tmp_path):
+    # a partition holding a {name, job} file and a later {name, job, zone}
+    # file must compact to the same rows with every label.  A plain read
+    # takes the schema of the first file by path, so the files are renamed
+    # to sort in write order: that read would drop label_zone and merge the
+    # two series
+    from tsdb_parquet_spark.maintenance import compact_table
+    from tsdb_parquet_spark.timeseries import load_tsdb
+
+    table = str(tmp_path / "t")
+    part = os.path.join(table, "blk=00000")
+
+    def append(df, tag):
+        write_sorted(df, part, mode="append")
+        for f in os.listdir(part):
+            if f.startswith("part-"):
+                os.rename(os.path.join(part, f), os.path.join(part, f"{tag}-{f}"))
+
+    append(
+        spark.createDataFrame(
+            [(1000, 1.0, "up", "api"), (2000, 2.0, "up", "api")],
+            "time long, value double, label_name string, label_job string",
+        ),
+        "a",
+    )
+    append(
+        spark.createDataFrame(
+            [(1000, 5.0, "up", "api", "eu-1"), (3000, 6.0, "up", "api", "eu-1")],
+            "time long, value double, label_name string, label_job string, "
+            "label_zone string",
+        ),
+        "b",
+    )
+
+    def rows():
+        df = load_tsdb(spark, table)
+        cols = sorted(df.columns)
+        return cols, sorted((tuple(r) for r in df.select(*cols).collect()), key=repr)
+
+    before = rows()
+    assert "label_zone" in before[0] and len(before[1]) == 4
+    assert compact_table(spark, table) == ["blk=00000"]
+    assert len([f for f in os.listdir(part) if f.endswith(".parquet")]) == 1
+    assert rows() == before

@@ -399,9 +399,9 @@ def main(argv: list[str] | None = None) -> None:
         return
 
     if args.cmd in ("cusum", "autocorr", "heatmap"):
-        from .timeseries import autocorr_lag, cusum_drift, value_heatmap
+        from .timeseries import autocorr_lag, cusum_drift, load_tsdb, value_heatmap
 
-        df = spark.read.option("mergeSchema", "true").parquet(args.table)
+        df = load_tsdb(spark, args.table)
         if args.cmd == "cusum":
             out = cusum_drift(df, target=args.target,
                               threshold=args.threshold, slack=args.slack)
@@ -416,8 +416,9 @@ def main(argv: list[str] | None = None) -> None:
 
     if args.cmd == "uptime":
         from .operators.intervals import heartbeat_uptime
+        from .timeseries import load_tsdb
 
-        df = spark.read.option("mergeSchema", "true").parquet(args.table)
+        df = load_tsdb(spark, args.table)
         out = heartbeat_uptime(df, args.ts, args.liveness, keys=[args.key])
         out.orderBy(args.key).show(args.limit, truncate=False)
         print(f"({out.count()} rows)")
@@ -491,8 +492,9 @@ def main(argv: list[str] | None = None) -> None:
         import json as _json
 
         from .promql_api import query_instant_response, query_range_response
+        from .timeseries import load_tsdb
 
-        df = spark.read.option("mergeSchema", "true").parquet(args.table)
+        df = load_tsdb(spark, args.table)
         if args.at is not None:
             resp = query_instant_response(df, args.expr, args.at)
         else:

@@ -93,13 +93,16 @@ def compact_table(
     ``min_files``) and small (average < half the target).  Returns the
     partitions rewritten.
 
-    Each rewrite: read one partition dir → coalesce to
+    Each rewrite: read one partition dir under the union of its files'
+    schemas (``metadata.read_parquet``: a file appended with a new label
+    column keeps it, and older rows read it as NULL) → coalesce to
     ``ceil(bytes/target)`` files → ``sortWithinPartitions`` (sorted layout
     survives) → write to a sibling temp dir → atomic-ish swap (rename old
     out, rename new in, delete old).  Readers racing a swap see the old or
     the new listing; for stronger isolation put a table format (Iceberg/
     Delta) on top — out of scope here, the mechanism is the point.
     """
+    from .metadata import read_parquet
     from .timeseries import TIME_COL
 
     rewritten: list[str] = []
@@ -108,7 +111,7 @@ def compact_table(
             continue
         part_path = f"{path}/{st.partition}" if st.partition else path
         n_out = max(1, math.ceil(st.total_bytes / target_file_bytes))
-        df = spark.read.parquet(part_path)
+        df = read_parquet(spark, part_path)
         cols = df.columns
         sort_by = sort_cols or ([TIME_COL] if TIME_COL in cols else cols[:1])
         jvm, fs, _ = _fs(spark, path)

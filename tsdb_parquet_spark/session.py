@@ -23,6 +23,11 @@ import os
 from pyspark.sql import SparkSession
 
 
+# the directory holding the tsdb_parquet_spark package: executor Python
+# workers must import it (see get_spark)
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def _local_cores() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -43,8 +48,21 @@ def get_spark(
     (``spark.python.daemon.module``), which stops every worker call from
     re-reading the pyspark.zip directory (~0.1-0.2 s a call before Python
     3.13). So executors must be able to import ``tsdb_parquet_spark``, as
-    ``format("tsdb")`` reads already require.
+    ``format("tsdb")`` reads already require: the package's parent directory
+    is appended to ``spark.executorEnv.PYTHONPATH`` (after any value
+    ``extra_conf`` gives it), so workers import it whatever the working
+    directory and ``PYTHONPATH``.
+
+    PySpark's DataFrame call-site capture
+    (``spark.python.sql.dataFrameDebugging.enabled``) is off; pass it as
+    ``"true"`` in ``extra_conf``, in a fresh process, to get call sites back
+    in error messages.
     """
+    conf = dict(extra_conf or {})
+    pypath = "spark.executorEnv.PYTHONPATH"
+    entries = [p for p in conf.get(pypath, "").split(os.pathsep) if p]
+    conf[pypath] = os.pathsep.join(
+        entries + ([] if _PACKAGE_PARENT in entries else [_PACKAGE_PARENT]))
     cores = _local_cores()
     builder = (
         SparkSession.builder.appName(app_name)
@@ -92,6 +110,17 @@ def get_spark(
         # most kernels run.  This daemon patches that re-read to happen only
         # when an archive changed, before it forks any worker (pyworker.py).
         .config("spark.python.daemon.module", "tsdb_parquet_spark.pyworker")
+        # Call-site capture wraps every F.*/Column call in PySpark's
+        # _with_origin: getActiveSession, a JVM class lookup, a conf read
+        # and an origin set + clear through Py4J, plus an `import IPython`
+        # attempt (IPython alone, when installed, adds ~26 MB to the
+        # driver).  The origin it records is the engine's own line, not the
+        # caller's.  Off: a block_ingest range-query plan makes ~350 Py4J
+        # round trips instead of ~960.  PySpark reads the flag once per
+        # process (pyspark.errors.utils.is_debugging_enabled), so a
+        # debugging session turns it back on through extra_conf in a fresh
+        # process.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Scan-split sizing is BYTE-based on COMPRESSED file size, and
         # Spark floors the split at openCostInBytes (4 MB default, an
@@ -125,7 +154,7 @@ def get_spark(
         # parallelism (__spark_entry__._BUCKETS).
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

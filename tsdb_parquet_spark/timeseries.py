@@ -784,28 +784,27 @@ def ensure_hybrid_label_layout(
     return Layout(table_name, build, source_paths).ensure(spark)
 
 
-def load_tsdb(
-    spark: SparkSession, path: str | None = None, merge_schema: bool = True
-) -> DataFrame:
-    """Scan the tsdb table (R7).
+def load_tsdb(spark: SparkSession, path: str | None = None) -> DataFrame:
+    """Scan the tsdb table (R7) under a schema pinned from its footers
+    (:func:`metadata.read_parquet`).
 
-    ``merge_schema=True`` (default) because label-set evolution IS this
-    layout's normal mode (the reference's dynamic columns,
-    ``hello.go:120-157``): a later ingest may add ``label_*`` columns,
-    and a plain read would take ONE file's footer — whichever Spark
-    samples — silently dropping new labels (or old rows' absence of
-    them) depending on file order.  Merged, pre-evolution rows read the
-    new labels as NULL, which the matcher layer already treats with
-    Prometheus-null semantics (absent label = empty).  Cost: a
-    parallel footer-merge pass at planning; for a 100 TB layout with
-    very many files, pin the schema instead (catalog table or a
-    maintained common-metadata file) and pass ``merge_schema=False``."""
+    Label-set evolution IS this layout's normal mode (the reference's
+    dynamic columns, ``hello.go:120-157``): a later ingest may add
+    ``label_*`` columns, and a plain read would take ONE file's footer,
+    silently dropping new labels depending on file order.  The pinned
+    schema is the union of every file's columns; pre-evolution rows read
+    the new labels as NULL, which the matcher layer already treats with
+    Prometheus-null semantics (absent label = empty).
+
+    Scale: no Spark job infers the schema (``mergeSchema`` launched one on
+    every call); the footers are read on the driver instead, O(files), about
+    0.1 ms a file on local disk.  Every file is still listed and scanned:
+    reading only the files a time range touches needs a per-file time index
+    the layout does not keep yet."""
+    from .metadata import read_parquet
     from .tables import TSDB_PATH
 
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(path or TSDB_PATH)
+    return read_parquet(spark, path or TSDB_PATH)
 
 
 def gap_fill(
